@@ -52,18 +52,6 @@ object SparkEntry {
         .select((col("doc_id") + 1000000000L).as("doc_id"),
           col("text")))
 
-  /** Spread a compact source across the session's shuffle parallelism
-    * before a CPU-heavy scan-stage projection (the editDistancePairs
-    * discipline): a single-file fixture arrives in 1-2 splits and
-    * would serialize the whole pass onto 2 cores; a production-scale
-    * scan already has thousands of splits and skips the shuffle.
-    */
-  private def spreadIfUnderParallel(spark: SparkSession,
-                                    df: DataFrame): DataFrame = {
-    val target = spark.sessionState.conf.numShufflePartitions
-    if (Graft.staticNumPartitions(df) < target) df.repartition(target) else df
-  }
-
   /** Exchange barrier between an expensive projection and whatever
     * re-executes its child: (a) a final `orderBy` — the range
     * partitioner's sampling job runs the sort's child once BEFORE the
@@ -603,6 +591,10 @@ object SparkEntry {
     // DuckDB's quantile_disc implements (verified empirically for
     // n=4,5,6,10 and all three quartiles). Outputs are actual data
     // elements, so no rounding is needed.
+    // An EAGER builder: the two quantile selections run their jobs at
+    // build time, not when the returned frame is consumed, and it is
+    // the one builder that runs them on its own threads (Futures) and
+    // waits for them.
     "q31_approx_percentile" -> ((s, d) => {
       import s.implicits._
       // Round 17: the full-accuracy GK sketch (ONE 17.6 s aggregation
@@ -638,8 +630,10 @@ object SparkEntry {
       // n counts ALL group rows (the old count(lit(1)) semantics,
       // null values included) — a column-pruned map-side agg
       val n = li.groupBy($"l_returnflag").agg(count(lit(1)).as("n"))
-      val q = Await.result(qF, scala.concurrent.duration.Duration.Inf)
-      val qp = Await.result(qpF, scala.concurrent.duration.Duration.Inf)
+      // one bounded wait for both chains: a wedged job fails the gate
+      // loudly instead of hanging the build
+      val (q, qp) = Await.result(qF.zip(qpF),
+        scala.concurrent.duration.Duration(1, "hour"))
       n.join(q, Seq("l_returnflag"), "left")
         .join(qp, Seq("l_returnflag"), "left")
         .select($"l_returnflag", $"q25", $"q50", $"q75",
@@ -1621,7 +1615,7 @@ object SparkEntry {
       // branches each re-run the tokenize off the 1–2-split fixture
       // scan (profiled: two 2-task jobs, 9.3 s of 7.9 s wall at sf1)
       operators.TextAnalysis.repetitionStats(
-          spreadIfUnderParallel(s, t(s, d, "documents")), "text",
+          Graft.spread(t(s, d, "documents")), "text",
           "doc_id")
         .orderBy(col("doc_id"))),
 
@@ -2300,7 +2294,7 @@ object SparkEntry {
       // BELOW the range exchange (the d22 lesson) — the spread keeps
       // that pushed-down work 32-way instead of on the 2-split scan
       operators.TextAnalysis.c4Clean(
-        orderedSource(s, spreadIfUnderParallel(s, docs), col("doc_id"))
+        orderedSource(s, Graft.spread(docs), col("doc_id"))
           .withColumn("text", withBad), "doc_id", "text")
     }),
 
@@ -2403,7 +2397,7 @@ object SparkEntry {
     // expression evaluated once per row (CollapseProject won't
     // duplicate a multiply-referenced non-cheap alias).
     "t26_winnowing" -> ((s, d) =>
-      spreadIfUnderParallel(s, t(s, d, "documents"))
+      Graft.spread(t(s, d, "documents"))
         .select(col("doc_id"),
           graft.functions.winnow_fingerprints(col("text"), 5, 4)
             .as("__fps"))
@@ -3437,7 +3431,7 @@ object SparkEntry {
     // name, and each frame's solid mean gray are pure doc_id
     // arithmetic for the oracle.
     "m3_multimodal_frames" -> ((s, d) => {
-      val blobs = spreadIfUnderParallel(s, t(s, d, "documents")).select(col("doc_id"),
+      val blobs = Graft.spread(t(s, d, "documents")).select(col("doc_id"),
         operators.Multimodal.encodeTestVideoAvi(
           (pmod(col("doc_id"), lit(16)) + 16).cast("int"),
           (pmod(col("doc_id"), lit(9)) + 16).cast("int"),
@@ -3468,7 +3462,7 @@ object SparkEntry {
       val fmt = element_at(
         array(lit("png"), lit("jpeg"), lit("bmp"), lit("gif")),
         (pmod(col("doc_id"), lit(4)) + 1).cast("int"))
-      val blobs = spreadIfUnderParallel(s, t(s, d, "documents")).select(col("doc_id"),
+      val blobs = Graft.spread(t(s, d, "documents")).select(col("doc_id"),
         operators.Multimodal.encodeTestImage(fmt,
           (pmod(col("doc_id"), lit(29)) + 8).cast("int"),
           (pmod(col("doc_id"), lit(17)) + 8).cast("int"),
@@ -3515,7 +3509,7 @@ object SparkEntry {
       val fmt = element_at(
         array(lit("png"), lit("jpeg"), lit("bmp"), lit("gif")),
         (pmod(col("doc_id"), lit(4)) + 1).cast("int"))
-      val blobs = spreadIfUnderParallel(s, t(s, d, "documents"))
+      val blobs = Graft.spread(t(s, d, "documents"))
         .select(col("doc_id"),
         operators.Multimodal.encodeTestImage(fmt,
           (pmod(col("doc_id"), lit(29)) + 8).cast("int"),
@@ -3543,7 +3537,7 @@ object SparkEntry {
       val rate = element_at(
         array(lit(8000), lit(16000), lit(22050), lit(44100)),
         (pmod(col("doc_id"), lit(4)) + 1).cast("int"))
-      val blobs = spreadIfUnderParallel(s, t(s, d, "documents"))
+      val blobs = Graft.spread(t(s, d, "documents"))
         .select(col("doc_id"),
         operators.Multimodal.encodeTestAudio(container, rate,
           (pmod(col("doc_id"), lit(2)) + 1).cast("int"),
@@ -3583,7 +3577,7 @@ object SparkEntry {
       // two-branch join spelling re-ran the whole encode on the
       // second branch (the join key's pushed isnotnull filter breaks
       // exchange-reuse between the branches)
-      val blobs = spreadIfUnderParallel(s, t(s, d, "documents"))
+      val blobs = Graft.spread(t(s, d, "documents"))
         .select(col("doc_id"),
           operators.Multimodal.encodeTestAudio(container, rate,
             (pmod(key, lit(2)) + 1).cast("int"),
@@ -3610,7 +3604,7 @@ object SparkEntry {
     // declared dims/frames, header fps, first-frame mean, and the
     // across-ALL-frames mean are pure doc_id arithmetic.
     "m9_video_decode" -> ((s, d) => {
-      val blobs = spreadIfUnderParallel(s, t(s, d, "documents"))
+      val blobs = Graft.spread(t(s, d, "documents"))
         .select(col("doc_id"),
         operators.Multimodal.encodeTestVideoAvi(
           (pmod(col("doc_id"), lit(16)) + 16).cast("int"),
@@ -3640,7 +3634,7 @@ object SparkEntry {
     "m6_image_dhash" -> ((s, d) => {
       val fmt = element_at(array(lit("png"), lit("bmp")),
         (pmod(col("doc_id"), lit(2)) + 1).cast("int"))
-      val blobs = spreadIfUnderParallel(s, t(s, d, "documents"))
+      val blobs = Graft.spread(t(s, d, "documents"))
         .select(col("doc_id"),
         operators.Multimodal.encodeTestImagePattern(fmt,
           (pmod(col("doc_id"), lit(28)) + 9).cast("int"),
@@ -3664,7 +3658,7 @@ object SparkEntry {
     "m7_image_neardup" -> ((s, d) => {
       val fmt = element_at(array(lit("png"), lit("bmp")),
         (pmod(col("doc_id"), lit(2)) + 1).cast("int"))
-      val blobs = spreadIfUnderParallel(s, t(s, d, "documents"))
+      val blobs = Graft.spread(t(s, d, "documents"))
         .select(col("doc_id"),
         operators.Multimodal.encodeTestImagePattern(fmt,
           (pmod(col("doc_id"), lit(28)) + 9).cast("int"),
@@ -3697,7 +3691,7 @@ object SparkEntry {
       val rate = element_at(
         array(lit(8000), lit(16000), lit(22050), lit(44100)),
         (pmod(col("doc_id"), lit(4)) + 1).cast("int"))
-      val blobs = spreadIfUnderParallel(s, t(s, d, "documents"))
+      val blobs = Graft.spread(t(s, d, "documents"))
         .select(col("doc_id"),
         operators.Multimodal.encodeTestAudioPattern(container, rate,
           (pmod(col("doc_id"), lit(4)) + 2).cast("int"),
@@ -3722,7 +3716,7 @@ object SparkEntry {
     // the per-doc energy ordering) and takes the exact all-pairs
     // hamming join.
     "m11_audio_neardup" -> ((s, d) => {
-      val base = spreadIfUnderParallel(s, t(s, d, "documents"))
+      val base = Graft.spread(t(s, d, "documents"))
         .select(col("doc_id"))
       def enc(df: DataFrame, containerShift: Int, gain: Int) = {
         val src = when(col("doc_id") >= 1000000L,
@@ -3766,7 +3760,7 @@ object SparkEntry {
     // the oracle replays the frame means, the 65 exact sample
     // positions, all 64 bits, and the exact all-pairs hamming join.
     "m12_video_neardup" -> ((s, d) => {
-      val base = spreadIfUnderParallel(s, t(s, d, "documents"))
+      val base = Graft.spread(t(s, d, "documents"))
         .filter(pmod(col("doc_id"), lit(7)) === 0).select(col("doc_id"))
       def enc(df: DataFrame, dw: Int, dh: Int, dfps: Int) = {
         val src = when(col("doc_id") >= 1000000L,

@@ -6,7 +6,7 @@ import org.apache.avro.{Schema => AvroSchema}
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.io.DecoderFactory
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftShim
+import org.apache.spark.sql.graftshim.GraftColumnBridge.{toColumn, toExpression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -56,8 +56,7 @@ object AvroFormat {
 
   /** Column function: binary Avro payload → struct. */
   def decode(payload: Column, avroSchemaJson: String): Column =
-    GraftShim.column(
-      AvroDecode(GraftShim.expression(payload), avroSchemaJson))
+    toColumn(AvroDecode(toExpression(payload), avroSchemaJson))
 }
 
 /** binary → struct decode against a writer schema. Thread-safe: the

@@ -103,7 +103,7 @@ object GraftFunctions {
   // function is just unwrap → compose → rewrap.
   private def c(e: Expression): Column = GraftColumnBridge.toColumn(e)
   private def x(col: Column): Expression =
-    GraftColumnBridge.toExpression(col)
+    GraftColumnBridge.toEagerExpression(col)
 
   /** split_by_hash(id, name1, w1, name2, w2, ... [, salt]): variadic
     * literal (name, weight) pairs after the id; a trailing unpaired

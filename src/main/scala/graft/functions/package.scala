@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftShim
+import org.apache.spark.sql.graftshim.GraftColumnBridge.{toColumn, toExpression}
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Column-function facade over graft's custom Catalyst expressions.
@@ -11,24 +11,24 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   */
 package object functions {
 
-  private def c(e: Expression): Column = GraftShim.column(e)
+  private def c(e: Expression): Column = toColumn(e)
 
   /** 64-bit SimHash of a token array (FNV-1a per token, sign-vote per
     * bit). Near-dup distance = bit_count(a ^ b).
     */
   def simhash64(tokens: Column): Column =
-    c(expressions.SimHash64(GraftShim.expression(tokens)))
+    c(expressions.SimHash64(toExpression(tokens)))
 
   /** SimHash64 straight from raw text (fused tokenize+hash). */
   def simhash64_text(text: Column): Column =
-    c(expressions.SimHashText(GraftShim.expression(text)))
+    c(expressions.SimHashText(toExpression(text)))
 
   /** MD5-token-hash SimHash64 of a token array — bit-reproducible by
     * any engine with md5() (used where signatures must be externally
     * verifiable; the FNV forms are the faster default).
     */
   def simhash64_md5(tokens: Column): Column =
-    c(expressions.SimHashMd5(GraftShim.expression(tokens)))
+    c(expressions.SimHashMd5(toExpression(tokens)))
 
   /** 128-bit MD5 SimHash of a token array → array<bigint> [hi, lo];
     * hi == simhash64_md5. The scale path past 64-bit banding: 4×32-bit
@@ -36,13 +36,13 @@ package object functions {
     * ~10M-docs-per-scope candidate-volume ceiling.
     */
   def simhash128_md5(tokens: Column): Column =
-    c(expressions.SimHashMd5Wide(GraftShim.expression(tokens)))
+    c(expressions.SimHashMd5Wide(toExpression(tokens)))
 
   /** Distinct word n-gram shingles hashed to longs in one pass over
     * the UTF-8 bytes (no token/shingle strings).
     */
   def shingle_hashes(text: Column, n: Int): Column =
-    c(expressions.ShingleHashes(GraftShim.expression(text), n))
+    c(expressions.ShingleHashes(toExpression(text), n))
 
   /** MinHash signature (k 64-bit minimums) of a string-array column —
     * one byte-level hash per element, k permutations via h1 + i·h2.
@@ -53,7 +53,7 @@ package object functions {
     * Same tokenization/hashing as `shingle_hashes`.
     */
   def gram_hashes(text: Column, n: Int): Column =
-    c(expressions.GramHashes(GraftShim.expression(text), n))
+    c(expressions.GramHashes(toExpression(text), n))
 
   /** Per-phrase occurrence counts (array<long>, aligned with
     * `patterns`) in one Aho–Corasick pass: every start position of
@@ -61,14 +61,14 @@ package object functions {
     * `TextAnalysis.blocklistStats`.
     */
   def multi_pattern_counts(text: Column, patterns: Seq[String]): Column =
-    c(expressions.MultiPatternCounts(GraftShim.expression(text), patterns))
+    c(expressions.MultiPatternCounts(toExpression(text), patterns))
 
   /** True iff ANY phrase occurs — first-hit early exit, zero per-row
     * allocation; the drop-filter spelling of `multi_pattern_counts`.
     * See `TextAnalysis.dropBlocklisted`.
     */
   def multi_pattern_any(text: Column, patterns: Seq[String]): Column =
-    c(expressions.MultiPatternAny(GraftShim.expression(text), patterns))
+    c(expressions.MultiPatternAny(toExpression(text), patterns))
 
   /** Merge-list byte-pair encoding (GPT-2 inference semantics):
     * whitespace words → code-point symbols → iterative lowest-rank
@@ -77,7 +77,7 @@ package object functions {
     * `expressions.BpeEncode`.
     */
   def bpe_encode(text: Column, merges: Seq[String]): Column =
-    c(expressions.BpeEncode(GraftShim.expression(text), merges))
+    c(expressions.BpeEncode(toExpression(text), merges))
 
   /** BYTE-LEVEL (GPT-2-style) BPE encoding: GPT-2 regex pretokens
     * (the space rides with its word) → UTF-8 bytes → byte-unicode
@@ -86,7 +86,7 @@ package object functions {
     * Reversible: `Tokenizer.decodeByteTokens` inverts it exactly.
     */
   def byte_bpe_encode(text: Column, merges: Seq[String]): Column =
-    c(expressions.ByteBpeEncode(GraftShim.expression(text), merges))
+    c(expressions.ByteBpeEncode(toExpression(text), merges))
 
   /** Unigram-LM (SentencePiece-style) encoding: whitespace words →
     * Viterbi-best segmentation under `(piece, logProb)` vocab from
@@ -94,7 +94,7 @@ package object functions {
     * `expressions.UnigramEncode`.
     */
   def unigram_encode(text: Column, vocab: Seq[(String, Double)]): Column =
-    c(expressions.UnigramEncode(GraftShim.expression(text), vocab))
+    c(expressions.UnigramEncode(toExpression(text), vocab))
 
   /** BYTE-FALLBACK unigram-LM encoding: GPT-2 pretokens → byte→
     * unicode mapping → Viterbi-best segmentation under a
@@ -104,17 +104,17 @@ package object functions {
     */
   def byte_unigram_encode(text: Column,
                           vocab: Seq[(String, Double)]): Column =
-    c(expressions.ByteUnigramEncode(GraftShim.expression(text), vocab))
+    c(expressions.ByteUnigramEncode(toExpression(text), vocab))
 
   /** Winnowing fingerprint selections in one native pass:
     * array<struct<pos, fp>> of each window's min gram-md5 (rightmost
     * ties), distinct, position order. See `Dedup.winnowingFingerprints`.
     */
   def winnow_fingerprints(text: Column, n: Int, window: Int): Column =
-    c(expressions.WinnowFingerprints(GraftShim.expression(text), n, window))
+    c(expressions.WinnowFingerprints(toExpression(text), n, window))
 
   def minhash_signature(shingles: Column, k: Int): Column =
-    c(expressions.MinHashSignature(GraftShim.expression(shingles), k))
+    c(expressions.MinHashSignature(toExpression(shingles), k))
 
   /** Greedy longest-match WordPiece tokenization (the BERT inference
     * rule): array<string> of subword pieces, continuations carrying
@@ -126,7 +126,7 @@ package object functions {
     */
   def wordpiece_encode(text: Column, vocab: Seq[String],
                        unk: String = "[UNK]"): Column =
-    c(expressions.WordPieceEncode(GraftShim.expression(text), vocab, unk))
+    c(expressions.WordPieceEncode(toExpression(text), vocab, unk))
 
   /** Cosine similarity of two float/double array columns, accumulated
     * in double (sequential loop — bit-compatible with a scalar
@@ -134,22 +134,22 @@ package object functions {
     */
   def cosine_similarity(a: Column, b: Column): Column =
     c(expressions.CosineSimilarity(
-      GraftShim.expression(a), GraftShim.expression(b)))
+      toExpression(a), toExpression(b)))
 
   /** IEEE 754 bit patterns of a numeric array (floats widened to
     * double first) — lossless array<bigint> transport for embeddings.
     */
   def double_bits(a: Column): Column =
-    c(expressions.DoubleBits(GraftShim.expression(a)))
+    c(expressions.DoubleBits(toExpression(a)))
 
   /** Dot product of two numeric array columns in double. */
   def dot_product(a: Column, b: Column): Column =
     c(expressions.DotProduct(
-      GraftShim.expression(a), GraftShim.expression(b)))
+      toExpression(a), toExpression(b)))
 
   /** L2-normalize a numeric array column to a unit double vector. */
   def l2_normalize(a: Column): Column =
-    c(expressions.L2Normalize(GraftShim.expression(a)))
+    c(expressions.L2Normalize(toExpression(a)))
 
   /** Bottom-k (KMV) distinct-sketch aggregate over an ALREADY-HASHED
     * bigint column — the bounded-buffer native aggregate behind
@@ -157,8 +157,8 @@ package object functions {
     * hash-and-flip wrapper and the estimators.
     */
   def kmv_sketch(hashed: Column, k: Int): Column =
-    GraftShim.column(expressions
-      .KmvSketchAgg(GraftShim.expression(hashed), k)
+    toColumn(expressions
+      .KmvSketchAgg(toExpression(hashed), k)
       .toAggregateExpression())
 
   /** Misra–Gries heavy-hitters aggregate over a string item column —
@@ -167,8 +167,8 @@ package object functions {
     * facade and the error contract.
     */
   def freq_sketch(item: Column, capacity: Int): Column =
-    GraftShim.column(expressions
-      .FreqSketchAgg(GraftShim.expression(item), capacity)
+    toColumn(expressions
+      .FreqSketchAgg(toExpression(item), capacity)
       .toAggregateExpression())
 
   /** Element-wise vector-sum aggregate over an array<float|double>
@@ -178,8 +178,8 @@ package object functions {
     * dimensions raise.
     */
   def vec_sum(vec: Column): Column =
-    GraftShim.column(expressions
-      .VecSumAgg(GraftShim.expression(vec))
+    toColumn(expressions
+      .VecSumAgg(toExpression(vec))
       .toAggregateExpression())
 
   /** Hashed classifier feature buckets of a token array — the native
@@ -190,14 +190,14 @@ package object functions {
     * nodes plus interpreted lambda machinery.
     */
   def hashed_buckets(tokens: Column, dim: Int, ngrams: Int = 1): Column =
-    c(expressions.HashedBuckets(GraftShim.expression(tokens), dim, ngrams))
+    c(expressions.HashedBuckets(toExpression(tokens), dim, ngrams))
 
   /** Σ weights(b) over a bucket array (exact int64, order-free) — the
     * trained scorer's dot product without the per-element interpreted
     * fold.
     */
   def bucket_dot(buckets: Column, weights: Seq[Long]): Column =
-    c(expressions.BucketDot(GraftShim.expression(buckets),
+    c(expressions.BucketDot(toExpression(buckets),
       weights.toArray))
 
   /** Per-bucket weighted occurrence sums in one aggregation pass —
@@ -206,9 +206,9 @@ package object functions {
     * and exchange payload are `dim` longs flat.
     */
   def bucket_hist(buckets: Column, weight: Column, dim: Int): Column =
-    GraftShim.column(expressions
-      .BucketHistAgg(GraftShim.expression(buckets),
-        GraftShim.expression(weight), dim)
+    toColumn(expressions
+      .BucketHistAgg(toExpression(buckets),
+        toExpression(weight), dim)
       .toAggregateExpression())
 
   /** PQ nearest-codeword ids for a vector (Jégou et al. 2011) —
@@ -217,7 +217,7 @@ package object functions {
     */
   def pq_assign(vec: Column, cb: Array[Array[Array[Double]]],
                 normalize: Boolean = true): Column =
-    c(expressions.PqAssign(GraftShim.expression(vec), cb, normalize))
+    c(expressions.PqAssign(toExpression(vec), cb, normalize))
 
   /** Per-query ADC distance table (m × nCodes squared L2).
     * `normalize = false` is the residual (IVF-PQ) mode: the input is
@@ -225,27 +225,27 @@ package object functions {
     */
   def pq_dist_table(vec: Column, cb: Array[Array[Array[Double]]],
                     normalize: Boolean = true): Column =
-    c(expressions.PqDistTable(GraftShim.expression(vec), cb, normalize))
+    c(expressions.PqDistTable(toExpression(vec), cb, normalize))
 
   /** ADC score: Σ_s dtab[s][codes[s]] — the PQ candidate-scan
     * distance (m primitive lookups per corpus row).
     */
   def pq_adc(codes: Column, dtab: Column): Column =
-    c(expressions.PqAdc(GraftShim.expression(codes),
-      GraftShim.expression(dtab)))
+    c(expressions.PqAdc(toExpression(codes),
+      toExpression(dtab)))
 
   /** Constant-matrix × vector product (the OPQ rotation projection):
     * out_i = Σ_j m[i][j]·vec_j, tight primitive loops, matrix baked
     * into the plan.
     */
   def mat_vec(vec: Column, m: Array[Array[Double]]): Column =
-    c(expressions.MatVec(GraftShim.expression(vec), m))
+    c(expressions.MatVec(toExpression(vec), m))
 
   /** Polynomial rolling hash (Rabin-Karp, base 1000003) of a string —
     * content fingerprinting primitive.
     */
   def rolling_hash(text: Column): Column =
-    c(expressions.RollingHash(GraftShim.expression(text)))
+    c(expressions.RollingHash(toExpression(text)))
 
   /** DataFusion-parity date_bin: floor `ts` to `strideSeconds` buckets
     * anchored at `originEpochSeconds` (composes built-ins — stays in
@@ -271,18 +271,18 @@ package object functions {
   def hyperplane_lsh_bucket(emb: Column, nPlanes: Int, dim: Int,
                             seed: Long = 42L): Column =
     c(expressions.HyperplaneLshBucket(
-      GraftShim.expression(emb), nPlanes, dim, seed))
+      toExpression(emb), nPlanes, dim, seed))
 
   /** Unicode normalization (NFC/NFD/NFKC/NFKD) — the canonical-form
     * step before any content hashing; already-normalized text passes
     * through untouched.
     */
   def unicode_normalize(text: Column, form: String = "NFC"): Column =
-    c(expressions.UnicodeNormalize(GraftShim.expression(text), form))
+    c(expressions.UnicodeNormalize(toExpression(text), form))
 
   /** Strip combining marks ('café' → 'cafe'); agrees with
     * DuckDB/utf8proc strip_accents on Latin accents.
     */
   def strip_accents(text: Column): Column =
-    c(expressions.StripAccents(GraftShim.expression(text)))
+    c(expressions.StripAccents(toExpression(text)))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Graft.spread
 
 /** Deduplication operators for 100TB-scale corpora.
   *
@@ -40,21 +41,6 @@ object Dedup {
     */
   def shingleHashes(text: Column, n: Int = 3): Column =
     graft.functions.shingle_hashes(text, n)
-
-  /** Spread a compact source across the session's shuffle parallelism
-    * before a CPU-heavy scan-stage projection (tokenize/digest/
-    * shingle/signature work): a single-file fixture arrives in 1-2
-    * splits and serializes the whole pass onto 1-2 cores (measured:
-    * a 66 MB 500k-doc file left 31 of 32 cores idle for ~13 s of
-    * digesting). Only fires when the source is under-parallel — a
-    * production-scale scan already has thousands of splits and must
-    * not pay a gratuitous shuffle. Applied BEFORE the signature
-    * select so the expensive expressions evaluate post-exchange.
-    */
-  private def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sessionState.conf.numShufflePartitions
-    if (graft.Graft.staticNumPartitions(df) < target) df.repartition(target) else df
-  }
 
   /** Exact Jaccard similarity of two (distinct-element) arrays. */
   def jaccard(a: Column, b: Column): Column =

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Graft.spread
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary`
   * columns with typed metadata, plus decode/feature-extract/
@@ -45,19 +46,6 @@ object Multimodal {
   private val maxAudioBytes: Long =
     sys.props.get("graft.multimodal.maxAudioBytes").map(_.toLong)
       .getOrElse(256L * 1024 * 1024)
-
-  /** Spread a compact source across the session's shuffle
-    * parallelism before a codec-heavy mapPartitions pass: a
-    * single-file fixture (or a small compacted drop) arrives in 1-2
-    * splits and would serialize every decode onto 1-2 cores while
-    * the rest of the executor idles. Only fires when the source is
-    * under-parallel — a production-scale blob table already has
-    * thousands of splits and skips the shuffle.
-    */
-  private def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sessionState.conf.numShufflePartitions
-    if (graft.Graft.staticNumPartitions(df) < target) df.repartition(target) else df
-  }
 
   /** Metadata struct carried alongside every media blob. */
   val mediaMetaSchema: StructType = StructType(Seq(

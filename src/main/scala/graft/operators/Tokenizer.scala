@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Graft.spread
 
 /** Tokenizer TRAINING — the learning half of the subword surface
   * whose inference half lives in `graft.expressions` (`BpeEncode`,
@@ -37,16 +38,6 @@ object Tokenizer {
     spread(df)
       .select(explode(TextAnalysis.tokenize(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-
-  /** Single-file test fixtures arrive as one input split, which would
-    * serialize the tokenize+explode scan stage onto one core; a
-    * production-scale scan already has thousands of splits and skips
-    * the repartition (the [[Dedup]] spread discipline).
-    */
-  private def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sessionState.conf.numShufflePartitions
-    if (graft.Graft.staticNumPartitions(df) < target) df.repartition(target) else df
-  }
 
   /** The capped, deterministically-ordered type table the merge loop
     * consumes: top `maxTypes` word types by (count desc, word asc).

@@ -2,33 +2,41 @@ package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter,
+  ExpressionUtils}
 
 /** Column ↔ Catalyst Expression bridge.
   *
   * Spark 4's Connect-compatible `Column` carries a `ColumnNode`, not an
-  * `Expression`; the classic-session converter that maps between them
-  * (`org.apache.spark.sql.classic.ExpressionUtils`) is `private[sql]`.
-  * graft's SQL function registry needs exactly that conversion — a
-  * registered function receives `Seq[Expression]` and wants to reuse
-  * the operator library's Column compositions as the single source of
-  * truth — so this object, compiled into the `org.apache.spark.sql`
-  * namespace, re-exports the two methods. No other internals are
+  * `Expression`; the classic-session converters that map between them
+  * (`org.apache.spark.sql.classic`) are `private[sql]`. graft builds
+  * its Column API over custom Catalyst expressions, and its SQL
+  * function registry reuses the operator library's Column
+  * compositions, so this object, compiled into the `org.apache.spark.sql`
+  * namespace, re-exports the conversions. No other internals are
   * touched; behavior is exactly the classic session's own resolution.
   */
 object GraftColumnBridge {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
 
-  /** EAGER node→expression conversion. `ExpressionUtils.expression`
-    * returns a lazy `ColumnNodeExpression` that only resolves when the
-    * analyzer's own converter pass sees it — an expression returned
-    * from a FunctionRegistry builder bypasses that pass and would die
-    * Unevaluable at codegen. Converting eagerly yields a plain
-    * catalyst tree (built-ins as `UnresolvedFunction`s the analyzer
-    * resolves in its normal fixed point).
+  /** LAZY node→expression conversion, for Column-API builders
+    * (`graft.functions`, `AvroFormat.decode`): the custom expression
+    * wraps a `ColumnNodeExpression` that resolves when the analyzer's
+    * own converter pass runs over the returned Column's plan, so the
+    * argument may be any Column, built-ins and unresolved names
+    * included.
     */
-  def toExpression(c: Column): Expression =
-    org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+  def toExpression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** EAGER node→expression conversion, for `FunctionRegistry`
+    * builders (`GraftFunctions`). An expression returned from a
+    * registry builder bypasses the analyzer's converter pass, so the
+    * lazy form would die Unevaluable at codegen. Converting eagerly
+    * yields a plain catalyst tree (built-ins as `UnresolvedFunction`s
+    * the analyzer resolves in its normal fixed point).
+    */
+  def toEagerExpression(c: Column): Expression =
+    ColumnNodeToExpressionConverter(c.node)
 
   /** Rebuild an ALREADY-MATERIALIZED frame (a checkpoint) as a fresh
     * `LogicalRDD` carrying NO inherited statistics or constraints.

@@ -10,6 +10,19 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     assert(orphans.isEmpty, s"oracle without query: $orphans")
   }
 
+  test("every bench_records.json row is a query or a Bench extra row") {
+    // a renamed or dropped Bench runner would silently orphan its
+    // pinned record (and its spike re-run guard)
+    val f = new java.io.File("bench_records.json")
+    assert(f.exists(), s"no bench_records.json at ${f.getAbsolutePath}")
+    import scala.jdk.CollectionConverters._
+    val recorded = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(f).get("records").fieldNames().asScala
+    val known = SparkEntry.queries.keySet ++ Bench.extraRows
+    val orphans = recorded.filterNot(known).toSeq
+    assert(orphans.isEmpty, s"records with no runner: $orphans")
+  }
+
   test("entry() returns rows (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

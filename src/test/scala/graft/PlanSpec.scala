@@ -99,6 +99,45 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       s"label cohesion must not plan a cartesian product:\n$p")
   }
 
+  test("t14 orderedSource: heavy projection over a per-partition Sort " +
+      "over a range exchange pinned at the shuffle partition count") {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{ProjectExec, SortExec}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
+      ShuffleExchangeExec}
+    // the gate has no final orderBy: its global doc_id order rides on
+    // the range partitions' index order plus the in-partition sort, so
+    // both must be in the plan, with the exchange safe from AQE
+    // coalescing (an explicit-count repartition) and the heavy rule
+    // battery evaluated above them
+    val p = SparkEntry.queries("t14_gopher_rules")(spark, sf)
+      .queryExecution.sparkPlan
+    val n = spark.sessionState.conf.numShufflePartitions
+    val ranges = p.collect {
+      case x: ShuffleExchangeExec
+          if x.outputPartitioning.isInstanceOf[RangePartitioning] => x
+    }
+    assert(ranges.size == 1 &&
+      ranges.head.outputPartitioning.numPartitions == n &&
+      ranges.head.shuffleOrigin == REPARTITION_BY_NUM,
+      s"expected one range exchange pinned at $n partitions:\n$p")
+    assert(p.collect { case s: SortExec if s.global => s }.isEmpty,
+      s"orderedSource must not plan a global sort:\n$p")
+    val heavy = p.collect { // the projection that computes the rules
+      case pr: ProjectExec if pr.projectList.exists {
+        case a: Alias => a.name == "n_required_hits"
+        case _ => false
+      } => pr
+    }
+    assert(heavy.size == 1, s"expected one rule-battery projection:\n$p")
+    assert(heavy.head.exists {
+      case s: SortExec => !s.global && (s.child eq ranges.head)
+      case _ => false
+    }, s"the rule battery must run over a per-partition Sort of the " +
+      s"range exchange:\n$p")
+  }
+
   test("session sizes shuffle partitions to cores, AQE on") {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     // Graft.session sets shuffle partitions = its cores argument; assert
