@@ -164,17 +164,16 @@ object Bench {
       k -> rerunByName.getOrElse(k, v)
     }
     // Roster tiers: cross-check rows are deliberate redundancy — the
-    // bounded exact twin (d6), the O(log n) CC escape hatch gated
-    // hash-exact against d8 (d13), and the per-frame explode form the
-    // pane tier is cross-checked against. Users run the recommended
-    // tier; round-over-round comparisons should too, so both
-    // subtotals are emitted.
+    // bounded exact twin (d6) and the O(log n) CC escape hatch gated
+    // hash-exact against d8 (d13). Users run the recommended tier;
+    // round-over-round comparisons should too, so both subtotals are
+    // emitted.
     // d32/d33 are persistence round trips of d27/d23 (same compute +
     // a write/read) — redundant with their inline twins by design
     // s10/s11 are append-path round trips of s7/s9 (same fit + an
     // append), q40 an I/O identity — redundancy-by-design rows
     val crossCheckTier = Set("d6_embedding_neardup",
-      "d13_dup_components_star", "exact_window_explode",
+      "d13_dup_components_star",
       "d32_winnow_overlap_indexed", "d33_minhash_overlap_indexed",
       "d34_decontaminate_indexed", "s7_ann_ivf_indexed",
       "s9_ann_pq_indexed", "d37_kmv_overlap_indexed",
@@ -473,13 +472,10 @@ object Bench {
         SizeAtLeast(1)), "1 hour").df))
     },
 
-    // Pane-vs-explode cost on the custom exact-emission operator at a
-    // 12:1 length/slide ratio (1h windows sliding by 5min): the pane
-    // form ships each row once and merges 12 pane partials at
-    // emission; the explode form ships every row 12× into per-frame
-    // state
-    "exact_window_explode" -> (e => exactWindow(e, pane = false)),
-    "exact_window_pane" -> (e => exactWindow(e, pane = true)),
+    // The custom exact-emission operator at a 12:1 length/slide ratio
+    // (1h windows sliding by 5min): each row ships once into its pane;
+    // every closing window merges 12 pane partials
+    "exact_window_pane" -> (e => exactWindow(e)),
 
     // Sparse-tier Aho–Corasick blocklist scan end-to-end: a generated
     // 100k-phrase list (≈1.7M trie nodes — forces the sparse
@@ -613,7 +609,7 @@ object Bench {
       array(element_at(col("embedding"), 1) + lit(0.015625)),
       slice(col("embedding"), 2, 63)))
 
-  private def exactWindow(e: Env, pane: Boolean): Double = clock {
+  private def exactWindow(e: Env): Double = clock {
     val src = e.events.df.filter(col("value").isNotNull)
       .select(col("event_type"), col("ts"),
         col("value").cast("double").as("value"))
@@ -622,12 +618,9 @@ object Bench {
       ExactWindow.ExactAgg.min("mn", "value"),
       ExactWindow.ExactAgg.max("mx", "value"),
       ExactWindow.ExactAgg.avg("av", "value"))
-    val out =
-      if (pane) ExactWindow.slidingPanes(src, Seq("event_type"), "ts",
-        lengthMs = 3600000L, slideMs = 300000L, aggs)
-      else ExactWindow.slidingRows(src, Seq("event_type"), "ts",
-        lengthMs = 3600000L, slideMs = 300000L, aggs)
-    e.drain(if (pane) "bench_ew_pane" else "bench_ew_explode", out)
+    e.drain("bench_ew_pane", ExactWindow.slidingPanes(src,
+      Seq("event_type"), "ts", lengthMs = 3600000L, slideMs = 300000L,
+      aggs))
   }
 
   // A unigram trainer, then one full-corpus encode pass with its vocab.

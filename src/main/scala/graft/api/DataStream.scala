@@ -1126,45 +1126,34 @@ final case class DataStream(
     next(flattenWindow(agged))
   }
 
-  /** The frame-exact custom-state window tier behind the fluent
-    * surface (graft.streaming.ExactWindow): caller-supplied
+  /** Frame-exact fixed windows behind the fluent surface
+    * ([[graft.streaming.ExactWindow.slidingPanes]]): caller-supplied
     * [[graft.streaming.ExactWindow.ExactAgg]] aggregates — any typed
-    * Aggregator, including map-state UDAFs — with tier selection:
-    *  - "timeout"  flatMapGroupsWithState + EventTimeTimeout (default)
-    *  - "tws"      Spark 4 transformWithState
-    *  - "pane"     pane partials ([[graft.streaming.ExactWindow
-    *               .slidingPanes]]; panes on the gcd(length, slide)
-    *               grid, any ratio)
-    *  - "session"  gap-merged sessions (`length` is the GAP; slide
-    *               must be None)
-    * Emission semantics match [[window]]/[[sessionWindow]] in append
-    * mode; group keys may be empty (global frames).
+    * Aggregator, including map-state UDAFs — over tumbling (`slide`
+    * None) or sliding windows of any length/slide ratio. Emission
+    * matches [[window]] in append mode; group keys may be empty
+    * (global frames).
     */
   def exactWindow(groupCols: Seq[String],
                   aggs: Seq[graft.streaming.ExactWindow.ExactAgg],
-                  length: String, slide: Option[String] = None,
-                  tier: String = "timeout"): DataStream = {
-    import graft.streaming.ExactWindow
+                  length: String,
+                  slide: Option[String] = None): DataStream = {
     val lengthMs = DataStream.intervalMs(length)
     val slideMs = slide.map(DataStream.intervalMs).getOrElse(lengthMs)
-    val out = tier match {
-      case "timeout" => ExactWindow.slidingRows(df, groupCols,
-        eventTimeCol, lengthMs, slideMs, aggs, watermarkDelay)
-      case "tws" => ExactWindow.slidingRows(df, groupCols, eventTimeCol,
-        lengthMs, slideMs, aggs, watermarkDelay,
-        useTransformWithState = true)
-      case "pane" => ExactWindow.slidingPanes(df, groupCols, eventTimeCol,
-        lengthMs, slideMs, aggs, watermarkDelay)
-      case "session" =>
-        require(slide.isEmpty, "session tier takes a gap, not a slide")
-        ExactWindow.sessionRows(df, groupCols, eventTimeCol, lengthMs,
-          aggs, watermarkDelay)
-      case other => throw new IllegalArgumentException(
-        s"unknown exactWindow tier '$other' " +
-          "(expected timeout | tws | pane | session)")
-    }
-    next(out)
+    next(graft.streaming.ExactWindow.slidingPanes(df, groupCols,
+      eventTimeCol, lengthMs, slideMs, aggs, watermarkDelay))
   }
+
+  /** Frame-exact session windows behind the fluent surface
+    * ([[graft.streaming.ExactWindow.sessionRows]]): the
+    * [[exactWindow]] aggregates over gap-merged sessions. Emission
+    * matches [[sessionWindow]] in append mode.
+    */
+  def exactSessionWindow(groupCols: Seq[String],
+                         aggs: Seq[graft.streaming.ExactWindow.ExactAgg],
+                         gap: String): DataStream =
+    next(graft.streaming.ExactWindow.sessionRows(df, groupCols,
+      eventTimeCol, DataStream.intervalMs(gap), aggs, watermarkDelay))
 
   private def flattenWindow(agged: DataFrame): DataFrame = {
     val others = agged.columns.filterNot(_ == "__window").map(col)
@@ -1297,8 +1286,8 @@ final case class DataStream(
 
 object DataStream {
 
-  /** Fixed-length interval string → milliseconds (the ExactWindow tier
-    * works in epoch millis). Parsed with the Catalyst parser — NOT
+  /** Fixed-length interval string → milliseconds (ExactWindow works
+    * in epoch millis). Parsed with the Catalyst parser — NOT
     * `expr()`, whose Spark 4 lazy Column defers parsing past this
     * check. Year-month intervals have no fixed length and are
     * rejected.

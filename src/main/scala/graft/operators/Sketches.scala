@@ -226,7 +226,11 @@ object Sketches {
     *     within-group) picks;
     *  3. a second pass over the SAME shuffle output (the map stage
     *     is reused, not recomputed) extracts just the picked
-    *     elements — a ≤ |groups|·|ps|·2-row collect.
+    *     elements — a ≤ |groups|·|ps|·2-row collect. It also counts
+    *     each group's run in the partitions it walks and requires
+    *     pass 1's counts back: a recomputed map stage over a
+    *     nondeterministic input fails loudly instead of picking
+    *     from shifted ranks.
     *
     * Rank conventions (both spec-pinned against the built-ins):
     *  - disc: 1-based rank ceil(p·n) over the group's non-null
@@ -295,15 +299,15 @@ object Sketches {
         totals.update(key, totals.getOrElse(key, 0L) + c)
       }
     }
+    val schema = org.apache.spark.sql.types.StructType(
+      df.select(keyCols: _*).schema.fields ++ Seq(
+        org.apache.spark.sql.types.StructField("n_values",
+          org.apache.spark.sql.types.LongType, nullable = false),
+        org.apache.spark.sql.types.StructField("qs",
+          org.apache.spark.sql.types.ArrayType(
+            org.apache.spark.sql.types.DoubleType), nullable = false)))
     if (totals.isEmpty) {
       // empty input: zero groups, schema preserved
-      val schema = org.apache.spark.sql.types.StructType(
-        df.select(keyCols: _*).schema.fields ++ Seq(
-          org.apache.spark.sql.types.StructField("n_values",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("qs",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.DoubleType), nullable = false)))
       return spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         schema)
@@ -344,40 +348,60 @@ object Sketches {
       .groupBy(_._1)
       .map { case (pid, s) => pid -> s.map(t => (t._2, t._3)) }
     val picksB = spark.sparkContext.broadcast(picksByPid)
-    // pass 2: extract exactly the picked elements (map stage reused)
-    val picked: Map[(Int, List[Any], Long), Double] =
+    // pass 2: extract exactly the picked elements (map stage reused),
+    // counting every group's run in the walked partition on the way
+    val pass2: Array[(Int, Seq[(List[Any], Long)],
+        Seq[((Int, List[Any], Long), Double)])] =
       rdd.mapPartitionsWithIndex { (pid, it) =>
         val want = picksB.value.getOrElse(pid, Seq.empty)
         if (want.isEmpty) Iterator.empty
         else {
           val offsByKey: Map[List[Any], Set[Long]] = want.groupBy(_._1)
             .map { case (key, offs) => key -> offs.map(_._2).toSet }
+          val runs = scala.collection.mutable
+            .ArrayBuffer.empty[(List[Any], Long)]
           val out = scala.collection.mutable
             .ArrayBuffer.empty[((Int, List[Any], Long), Double)]
           var curKey: List[Any] = null
           var pos = -1L
           it.foreach { r =>
             val key = keyOf(r)
-            if (key != curKey) { curKey = key; pos = -1L }
+            if (key != curKey) {
+              if (curKey != null) runs.append(curKey -> (pos + 1L))
+              curKey = key; pos = -1L
+            }
             pos += 1L
             if (offsByKey.get(key).exists(_.contains(pos)))
               out.append(((pid, key, pos), r.getDouble(k)))
           }
-          out.iterator
+          if (curKey != null) runs.append(curKey -> (pos + 1L))
+          Iterator.single((pid, runs.toSeq, out.toSeq))
         }
-      }.collect().toMap
+      }.collect()
     picksB.destroy()
+    // the picks are only valid over the rows pass 1 counted: a map
+    // stage recomputed between the passes (lost shuffle output, a
+    // nondeterministic input) must fail loudly, never pick shifted ranks
+    val pass1ByPid = partCounts.toMap
+    pass2.foreach { case (pid, runs, _) =>
+      val was = pass1ByPid(pid).toMap
+      val now = runs.groupMapReduce(_._1)(_._2)(_ + _)
+      (was.keySet ++ now.keySet).find(key => was.get(key) != now.get(key))
+        .foreach { key =>
+          throw new IllegalStateException(
+            s"groupedOrderStats: group $key in partition $pid counted " +
+              s"${was.getOrElse(key, 0L)} rows in pass 1 but " +
+              s"${now.getOrElse(key, 0L)} in pass 2 — the input " +
+              "recomputed differently between the passes (a " +
+              "nondeterministic source or expression); persist it first")
+        }
+    }
+    val picked: Map[(Int, List[Any], Long), Double] =
+      pass2.iterator.flatMap(_._3).toMap
     def valueAtRank(key: List[Any], rank: Long): Double = {
       val (pid, off) = pickAt((key, rank))
       picked((pid, key, off))
     }
-    val schema = org.apache.spark.sql.types.StructType(
-      df.select(keyCols: _*).schema.fields ++ Seq(
-        org.apache.spark.sql.types.StructField("n_values",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("qs",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType), nullable = false)))
     val rows: Seq[org.apache.spark.sql.Row] = totals.toSeq.map {
       case (key, n) =>
         val qs = ps.map { p =>

@@ -1323,45 +1323,15 @@ object TextAnalysis {
       // group (groupBy keeps it) and plain equality would drop it
       val joinCond = by.zip(kn)
         .map { case (a, k) => col(a) <=> col(k) }.reduce(_ && _)
-      // iterations ≥ 2 fold the per-group (a, b) in as LITERAL
-      // when-chains (the d41 baselines-as-literals discipline, round
-      // 17) instead of a broadcast parameter join — each iteration
-      // then stays ONE scan + one keyed aggregate with zero joins and
-      // zero broadcast builds. A when-chain evaluates O(|groups|)
-      // comparisons per row, so past `literalGroupLimit` groups the
-      // broadcast join (O(1) hash probe per row) takes over — the
-      // conf keeps both paths honest; outputs are bit-identical
-      // either way (same constants, same arithmetic — spec-pinned).
-      val literalGroupLimit = spark.conf
-        .get("spark.graft.calibrate.literalGroupLimit", "512").toInt
-      def litOf(v: Any): Column = v match {
-        case null => lit(null)
-        case x => lit(x)
-      }
-      def groupCond(k: List[Any]): Column = by.zip(k)
-        .map { case (c, v) => col(c) <=> litOf(v) }.reduce(_ && _)
       for (it <- 0 until iters) {
         val first = it == 0
-        val useLiterals = !first && state.size <= literalGroupLimit
         val (aCol, bCol) =
-          if (first) (lit(1000000L), lit(0L))
-          else if (useLiterals) {
-            val sts = state.toSeq
-            val aChain = sts.tail.foldLeft(
-              when(groupCond(sts.head._1), lit(sts.head._2._1))) {
-              case (acc, (k, (a, _))) => acc.when(groupCond(k), lit(a))
-            }
-            val bChain = sts.tail.foldLeft(
-              when(groupCond(sts.head._1), lit(sts.head._2._2))) {
-              case (acc, (k, (_, b))) => acc.when(groupCond(k), lit(b))
-            }
-            (aChain, bChain)
-          } else (col("__a"), col("__b"))
+          if (first) (lit(1000000L), lit(0L)) else (col("__a"), col("__b"))
         val m = (aCol * col("x") + bCol) / lit(1000000.0)
         val sg = lit(0.5) + lit(0.5) * (m / (lit(1.0) + abs(m)))
         val r = sg - col("y")
         val joined =
-          if (first || useLiterals) base
+          if (first) base
           else {
             val rows: java.util.List[org.apache.spark.sql.Row] =
               java.util.Arrays.asList(state.toSeq.map {

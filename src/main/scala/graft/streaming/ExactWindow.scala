@@ -6,9 +6,8 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StatefulProcessor, TimeMode, TimerValues, ExpiredTimerInfo,
-  TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
+  TimeMode, TimerValues, ExpiredTimerInfo, TTLConfig, ValueState}
 import org.apache.spark.sql.types._
 
 /** Reference-exact streaming window emission as a custom stateful
@@ -26,21 +25,23 @@ import org.apache.spark.sql.types._
   * cases where frame-exact control matters — custom state layout,
   * per-window side effects, non-standard late policies.
   *
-  * Two interchangeable execution tiers behind the same surface:
-  *  - [[slidingRows]] default: flatMapGroupsWithState +
-  *    EventTimeTimeout (Spark's long-stable custom-stateful API);
-  *  - `useTransformWithState = true`: the Spark 4 successor operator
-  *    (StatefulProcessor + event-time timers, per-state-variable TTL,
-  *    evolvable state schema). Both pass the same ExactWindowSpec
-  *    matrix; both checkpoint/restore through the state store.
+  * One operator per window shape, both on Spark 4's
+  * `transformWithState` (StatefulProcessor + event-time timers):
+  *  - [[slidingPanes]]: tumbling and sliding windows, grouped or
+  *    global. Each row lands in ONE pane; closing windows merge their
+  *    panes' partials;
+  *  - [[sessionRows]]: gap-merged session windows.
+  * Both are spec-checked against the built-in aggregate
+  * (`window()`/`session_window` plus `udaf(...)`) on the same rows,
+  * and both checkpoint/restore through the state store.
   *
   * Aggregates are caller-supplied [[ExactAgg]]s — any typed
   * `Aggregator` (including map-state UDAFs like Udafs.CountByValue)
   * lifts into the operator via `ExactAgg(name, extract, agg, type)`,
   * matching the reference's arbitrary-accumulator frames. Group keys
-  * are any number of columns. The classic count/sum/min/max/avg
-  * surface ([[tumbling]]/[[sliding]]) is a thin preset over the same
-  * path.
+  * are any number of columns, or none. The classic
+  * count/sum/min/max/avg surface ([[tumbling]]/[[sliding]]) is a thin
+  * preset over [[slidingPanes]].
   */
 object ExactWindow {
 
@@ -54,9 +55,7 @@ object ExactWindow {
     def outputType: DataType
     def init(): Any
     def reduce(buf: Any, row: Row): Any
-    /** Combine two partial buffers (session-merge and pane-merge use
-      * this; plain frame aggregation never calls it).
-      */
+    /** Combine two partial buffers (session-merge and pane-merge). */
     def merge(b1: Any, b2: Any): Any
     def finish(buf: Any): Any
     def toBytes(buf: Any): Array[Byte]
@@ -105,7 +104,7 @@ object ExactWindow {
 
     /** Numeric presets over a double column. Null values are skipped at
       * reduce time (built-in agg null semantics), so calling
-      * [[ExactWindow.slidingRows]] directly with a nullable column is
+      * [[ExactWindow.slidingPanes]] directly with a nullable column is
       * safe: count counts non-null rows, and a frame whose rows are all
       * null emits count 0 with null sum/min/max/avg — exactly what
       * `count(col)/sum/min/max/avg` return over an all-null group.
@@ -230,35 +229,37 @@ object ExactWindow {
 
   /** Classic single-key count/sum/min/max/avg surface — the reference
     * example set (simple_aggregation.rs:47-52) — as a preset over
-    * [[slidingRows]]. Output columns: group, window_start_time,
+    * [[slidingPanes]]. Output columns: group, window_start_time,
     * window_end_time, n, sum, min, max, avg.
     */
   def sliding(df: DataFrame, groupCol: String, tsCol: String,
               valueCol: String, lengthMs: Long, slideMs: Long,
-              delay: String = "0 seconds",
-              useTransformWithState: Boolean = false): DataFrame = {
+              delay: String = "0 seconds"): DataFrame = {
     val projected = df
       // primitive Double buffers: a null value would kill the query,
       // built-in aggs skip nulls — match that contract here
       .filter(col(valueCol).isNotNull)
       .select(col(groupCol).cast("string").as("group"),
         col(tsCol).as("__ts"), col(valueCol).cast("double").as("v"))
-    slidingRows(projected, Seq("group"), "__ts", lengthMs, slideMs,
+    slidingPanes(projected, Seq("group"), "__ts", lengthMs, slideMs,
       Seq(ExactAgg.count("n", "v"), ExactAgg.sum("sum", "v"),
         ExactAgg.min("min", "v"), ExactAgg.max("max", "v"),
         ExactAgg.avg("avg", "v")),
-      delay, useTransformWithState)
+      delay)
   }
 
   @annotation.tailrec
   private def gcd(a: Long, b: Long): Long = if (b == 0) a else gcd(b, a % b)
 
-  /** Pane-based sliding windows: semantically identical to
-    * [[slidingRows]] (a tier-equivalence spec pins it), but each row is
-    * accumulated into exactly ONE slide-aligned pane instead of being
-    * exploded into ceil(length/slide) overlapping frames — for a
-    * 60s/1s window that is 60× less shuffle volume and 60× fewer state
-    * rows, bought at emission time by merging length/slide pane
+  /** Tumbling and sliding windows with ARBITRARY aggregates and
+    * multi-column group keys — the general form matching the
+    * reference's arbitrary-accumulator frames. Window starts are the
+    * slide grid (Spark's `window()` and the reference's per-row
+    * routing, grouped_window_agg_stream.rs:443-650); slide == length
+    * is tumbling. Each row is accumulated into exactly ONE pane rather
+    * than into each of its ceil(length/slide) overlapping frames — for
+    * a 60s/1s window that is 60× less shuffle volume and 60× fewer
+    * state rows, bought at emission time by merging length/slide pane
     * partials per closing window (cheap: panes, not rows).
     *
     * Panes live on the gcd(length, slide) grid: both the window length
@@ -266,7 +267,7 @@ object ExactWindow {
     * exactly for ARBITRARY length/slide ratios (a 7s/3s window uses
     * 1s panes, 7 per window). When length % slide == 0 the grid equals
     * the slide — the classic case, with its full length/slide shuffle
-    * and state reduction; as the gcd shrinks the tier degrades
+    * and state reduction; as the gcd shrinks the operator degrades
     * gracefully toward per-row granularity rather than rejecting the
     * shape. Requires [[ExactAgg.merge]] (any `Aggregator` lift
     * provides it). State per group: MapState pane-start → partial
@@ -275,34 +276,31 @@ object ExactWindow {
     * A pane is evicted as soon as the watermark passes the end of the
     * last window containing it, so state holds at most
     * (active time range / paneMs) panes per group. Emission instant
-    * matches [[slidingRows]] and the built-in append-mode aggregate: a
-    * window emits exactly when the watermark passes its end, and only
-    * if at least one row fell in it.
+    * matches the built-in append-mode aggregate: a window emits
+    * exactly when the watermark passes its end, and only if at least
+    * one row fell in it.
+    *
+    * `groupCols` may be EMPTY: the global form keeps one pane map for
+    * the whole stream, mirroring the reference's ungrouped operator
+    * pair (`WindowAggStream` partial + `FullWindowAggStream` final,
+    * crates/core/src/physical_plan/continuous/streaming_window.rs
+    * :640-828, :882-1035). Scale note: a global
+    * window concentrates on one task by definition — at high input
+    * rates prefer the built-in two-stage global path (partial
+    * aggregation before the single-key shuffle, SparkEntry q24)
+    * unless frame-exact control is required.
+    *
+    * Output schema: groupCols (original types) ++ window_start_time,
+    * window_end_time ++ one column per [[ExactAgg]].
     */
   def slidingPanes(df: DataFrame, groupCols: Seq[String], tsCol: String,
                    lengthMs: Long, slideMs: Long, aggs: Seq[ExactAgg],
                    delay: String = "0 seconds"): DataFrame = {
     require(slideMs > 0 && lengthMs >= slideMs,
       "need 0 < slide <= length")
-    require(aggs.nonEmpty, "need at least one aggregate")
-    require(aggs.map(_.name).distinct.length == aggs.length,
-      "aggregate names must be unique")
     val paneMs = gcd(lengthMs, slideMs)
     val panesPerWindow = (lengthMs / paneMs).toInt
-    val prepared = df.withWatermark(tsCol, delay)
     val nKeys = groupCols.length
-    val keySchema = StructType(groupCols.map(c => prepared.schema(c)))
-    val outSchema = StructType(
-      groupCols.map(c => prepared.schema(c)) ++
-        Seq(StructField("window_start_time", TimestampType),
-          StructField("window_end_time", TimestampType)) ++
-        aggs.map(a => StructField(a.name, a.outputType)))
-    val keyEnc: Encoder[Row] = ExpressionEncoder(keySchema)
-    val outEnc: Encoder[Row] = ExpressionEncoder(outSchema)
-
-    val keyed = prepared.groupByKey { r: Row =>
-      Row.fromSeq(groupCols.map(c => r.getAs[Any](c)))
-    }(keyEnc)
 
     val processor = new StatefulProcessor[Row, Row, Row] {
       @transient private var panes:
@@ -413,18 +411,17 @@ object ExactWindow {
         out.iterator
       }
     }
-    keyed.transformWithState(processor, TimeMode.EventTime(),
-      OutputMode.Append())(outEnc).toDF()
+    runKeyed(df, groupCols, tsCol, aggs, delay, processor)
   }
 
-  /** Session windows with gap merging in the custom stateful tier —
+  /** Session windows with gap merging in the custom stateful operator —
     * EXCEEDS the reference: its logical plan declares `Session(gap)`
     * but the physical operator `todo!()`s it
     * (/root/reference/crates/core/src/logical_plan/streaming_window.rs:69-74,
     * crates/core/src/physical_plan/continuous/streaming_window.rs:1062).
     * The built-in `session_window` covers the declarative path
     * (SparkEntry q9); this form gives sessions the same frame-exact
-    * custom-state control [[slidingRows]] gives fixed windows, with the
+    * custom-state control [[slidingPanes]] gives fixed windows, with the
     * same caller-supplied [[ExactAgg]] aggregates (their `merge` powers
     * session coalescing).
     *
@@ -434,31 +431,12 @@ object ExactWindow {
     * batch iteration order doesn't matter. One event-time timer tracks
     * the earliest open end; a session emits exactly when the watermark
     * passes its end (last + gap), the built-in append-mode instant.
-    * Runs on the transformWithState tier (multiple live sessions per
-    * key need re-armable timers; the single-timeout
-    * flatMapGroupsWithState surface cannot express that cleanly).
     */
   def sessionRows(df: DataFrame, groupCols: Seq[String], tsCol: String,
                   gapMs: Long, aggs: Seq[ExactAgg],
                   delay: String = "0 seconds"): DataFrame = {
     require(gapMs > 0, "need gap > 0")
-    require(aggs.nonEmpty, "need at least one aggregate")
-    require(aggs.map(_.name).distinct.length == aggs.length,
-      "aggregate names must be unique")
-    val prepared = df.withWatermark(tsCol, delay)
     val nKeys = groupCols.length
-    val keySchema = StructType(groupCols.map(c => prepared.schema(c)))
-    val outSchema = StructType(
-      groupCols.map(c => prepared.schema(c)) ++
-        Seq(StructField("window_start_time", TimestampType),
-          StructField("window_end_time", TimestampType)) ++
-        aggs.map(a => StructField(a.name, a.outputType)))
-    val keyEnc: Encoder[Row] = ExpressionEncoder(keySchema)
-    val outEnc: Encoder[Row] = ExpressionEncoder(outSchema)
-
-    val keyed = prepared.groupByKey { r: Row =>
-      Row.fromSeq(groupCols.map(c => r.getAs[Any](c)))
-    }(keyEnc)
 
     // state row: (session start ms, last event ms, one serialized
     // buffer per aggregate) — spelled concretely where an encoder is
@@ -542,156 +520,39 @@ object ExactWindow {
         }
       }
     }
-    keyed.transformWithState(processor, TimeMode.EventTime(),
-      OutputMode.Append())(outEnc).toDF()
+    runKeyed(df, groupCols, tsCol, aggs, delay, processor)
   }
 
-  /** Sliding window with ARBITRARY aggregates and multi-column group
-    * keys — the general form matching the reference's
-    * arbitrary-accumulator frames. Each row feeds every overlapping
-    * frame (the reference's `get_windows_for_watermark` row routing,
-    * grouped_window_agg_stream.rs:443-650); slide == length degrades
-    * to tumbling.
-    *
-    * `groupCols` may be EMPTY: the ungrouped/global form keys frames on
-    * the window start alone, mirroring the reference's dedicated
-    * ungrouped operator pair (`WindowAggStream` partial + `FullWindow
-    * AggStream` final, /root/reference/crates/core/src/physical_plan/
-    * continuous/streaming_window.rs:640-828, :882-1035) with the same
-    * emission instant (watermark passes window end). Scale note: a
-    * global window concentrates each frame on one task by definition —
-    * at high input rates prefer the built-in two-stage global path
-    * (partial aggregation before the single-key shuffle, SparkEntry
-    * q24) unless frame-exact control is required.
-    *
-    * Output schema: groupCols (original types) ++ window_start_time,
-    * window_end_time ++ one column per [[ExactAgg]].
-    *
-    * @param useTransformWithState run on Spark 4's transformWithState
-    *        (StatefulProcessor + event-time timers) instead of
-    *        flatMapGroupsWithState + EventTimeTimeout; semantics are
-    *        identical, state layouts differ (not checkpoint-compatible
-    *        with each other).
+  /** What both operators share: check the aggregates, watermark the
+    * input, key it by `groupCols` and run `processor` on
+    * transformWithState in event time. Output: groupCols (original
+    * types) ++ window_start_time, window_end_time ++ one column per
+    * [[ExactAgg]]. transformWithState refuses an empty key, so the
+    * global form keys every row on one constant (opaque to Catalyst
+    * inside the key function, so never folded away) and emits no key
+    * column.
     */
-  def slidingRows(df: DataFrame, groupCols: Seq[String], tsCol: String,
-                  lengthMs: Long, slideMs: Long, aggs: Seq[ExactAgg],
-                  delay: String = "0 seconds",
-                  useTransformWithState: Boolean = false): DataFrame = {
-    require(slideMs > 0 && lengthMs >= slideMs,
-      "need 0 < slide <= length")
+  private def runKeyed(df: DataFrame, groupCols: Seq[String],
+                       tsCol: String, aggs: Seq[ExactAgg], delay: String,
+                       processor: StatefulProcessor[Row, Row, Row])
+      : DataFrame = {
     require(aggs.nonEmpty, "need at least one aggregate")
     require(aggs.map(_.name).distinct.length == aggs.length,
       "aggregate names must be unique")
-    // non-multiple slides: ceil(length/slide) candidate frames per row,
-    // the range filter below trims the one candidate that may fall out
-    // (matches Spark's window() and the reference's per-row routing —
-    // window starts are the slide grid, not length-aligned)
-    val framesPerRow = ((lengthMs + slideMs - 1) / slideMs).toInt
-
-    // frame explosion stays at Column level: an object-level flatMap
-    // would strip the watermark tag from the event-time column and
-    // event-time timeouts/timers require it downstream
-    val tsMs = unix_millis(col(tsCol))
-    val newest = tsMs - pmod(tsMs, lit(slideMs))
     val prepared = df.withWatermark(tsCol, delay)
-      .withColumn("__ws", explode(array(
-        (0 until framesPerRow).map(k => newest - lit(k * slideMs)): _*)))
-      .filter(col("__ws") > tsMs - lit(lengthMs))
-
-    val nKeys = groupCols.length
+    val keyFields = groupCols.map(c => prepared.schema(c))
     val keySchema = StructType(
-      groupCols.map(c => prepared.schema(c)) :+
-        StructField("__ws", LongType, nullable = false))
-    val outSchema = StructType(
-      groupCols.map(c => prepared.schema(c)) ++
-        Seq(StructField("window_start_time", TimestampType),
-          StructField("window_end_time", TimestampType)) ++
-        aggs.map(a => StructField(a.name, a.outputType)))
-    val keyEnc: Encoder[Row] = ExpressionEncoder(keySchema)
-    val outEnc: Encoder[Row] = ExpressionEncoder(outSchema)
-    val stateEnc: Encoder[Array[Array[Byte]]] =
-      ExpressionEncoder[Array[Array[Byte]]]()
-
-    // NOTE: no mapValues — it re-serializes the value columns and
-    // strips the watermark tag event-time timeouts depend on
-    val keyed = prepared.groupByKey { r: Row =>
-      Row.fromSeq(groupCols.map(c => r.getAs[Any](c)) :+
-        r.getAs[Long]("__ws"))
-    }(keyEnc)
-
-    def emitRow(key: Row, bufs: Array[Any]): Row = {
-      val ws = key.getLong(nKeys)
-      Row.fromSeq(
-        (0 until nKeys).map(key.get) ++
-          Seq(new Timestamp(ws), new Timestamp(ws + lengthMs)) ++
-          aggs.indices.map(i => aggs(i).finish(bufs(i))))
-    }
-    def reduceAll(bufs: Array[Any], rows: Iterator[Row]): Unit =
-      rows.foreach { r =>
-        var i = 0
-        while (i < bufs.length) { bufs(i) = aggs(i).reduce(bufs(i), r); i += 1 }
-      }
-    def serialize(bufs: Array[Any]): Array[Array[Byte]] =
-      Array.tabulate(bufs.length)(i => aggs(i).toBytes(bufs(i)))
-    def deserialize(bytes: Array[Array[Byte]]): Array[Any] =
-      Array.tabulate(bytes.length)(i => aggs(i).fromBytes(bytes(i)))
-
-    val out =
-      if (!useTransformWithState) {
-        keyed.flatMapGroupsWithState(
-          OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-          (key: Row, rows: Iterator[Row],
-           state: GroupState[Array[Array[Byte]]]) => {
-            if (state.hasTimedOut) {
-              // watermark passed window end → emit once, drop the frame
-              val bufs = deserialize(state.get)
-              state.remove()
-              Iterator(emitRow(key, bufs))
-            } else {
-              // Spark routes only non-late rows here (watermark filter
-              // upstream = the reference's closed-window batch drop)
-              val bufs = state.getOption.map(deserialize)
-                .getOrElse(Array.tabulate[Any](aggs.length)(i => aggs(i).init()))
-              reduceAll(bufs, rows)
-              state.update(serialize(bufs))
-              // fire exactly when watermark reaches window end
-              state.setTimeoutTimestamp(key.getLong(nKeys) + lengthMs)
-              Iterator.empty
-            }
-          })(stateEnc, outEnc)
-      } else {
-        val processor = new StatefulProcessor[Row, Row, Row] {
-          @transient private var buf: ValueState[Array[Array[Byte]]] = _
-          override def init(outputMode: OutputMode,
-                            timeMode: TimeMode): Unit =
-            buf = getHandle.getValueState[Array[Array[Byte]]]("frame",
-              ExpressionEncoder[Array[Array[Byte]]](), TTLConfig.NONE)
-          override def handleInputRows(key: Row, rows: Iterator[Row],
-                                       timers: TimerValues): Iterator[Row] = {
-            val first = !buf.exists()
-            val bufs =
-              if (first) Array.tabulate[Any](aggs.length)(i => aggs(i).init())
-              else deserialize(buf.get())
-            reduceAll(bufs, rows)
-            buf.update(serialize(bufs))
-            // one timer per (group, window) frame, set at first sight:
-            // fires when the event-time watermark passes window end —
-            // the same emission instant as the timeout form
-            if (first) getHandle.registerTimer(key.getLong(nKeys) + lengthMs)
-            Iterator.empty
-          }
-          override def handleExpiredTimer(key: Row, timers: TimerValues,
-              expired: ExpiredTimerInfo): Iterator[Row] =
-            if (!buf.exists()) Iterator.empty
-            else {
-              val bufs = deserialize(buf.get())
-              buf.clear()
-              Iterator(emitRow(key, bufs))
-            }
-        }
-        keyed.transformWithState(processor, TimeMode.EventTime(),
-          OutputMode.Append())(outEnc)
-      }
-    out.toDF()
+      if (groupCols.isEmpty) Seq(StructField("__gk", IntegerType))
+      else keyFields)
+    val outSchema = StructType(keyFields ++
+      Seq(StructField("window_start_time", TimestampType),
+        StructField("window_end_time", TimestampType)) ++
+      aggs.map(a => StructField(a.name, a.outputType)))
+    prepared.groupByKey { r: Row =>
+        if (groupCols.isEmpty) Row(0)
+        else Row.fromSeq(groupCols.map(c => r.getAs[Any](c)))
+      }(ExpressionEncoder(keySchema))
+      .transformWithState(processor, TimeMode.EventTime(),
+        OutputMode.Append())(ExpressionEncoder(outSchema)).toDF()
   }
 }

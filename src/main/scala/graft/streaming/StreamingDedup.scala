@@ -28,7 +28,7 @@ import org.apache.spark.sql.types._
   * timing), not watermark-gated; rows later than the watermark are
   * dropped by Spark's pre-operator late-row filter, and a bucket entry
   * is evicted once the watermark passes `ts + horizon` (event-time
-  * timers, same machinery as [[ExactWindow]]).
+  * timers, the machinery of [[ExactWindow.slidingPanes]]).
   *
   * Duplicate suppression across bands is structural, not a second
   * stateful dedup: every entry carries its full band-key vector, so a
@@ -95,8 +95,8 @@ object StreamingDedup {
       .filter(col("__id").isNotNull && col("__ts").isNotNull &&
         col("__bands").isNotNull && col("__payload").isNotNull)
       .withWatermark("__ts", delay)
-      // explode stays at Column level so the watermark tag survives
-      // (same constraint as ExactWindow.slidingRows)
+      // explode stays at Column level: an object-level flatMap would
+      // strip the watermark tag the event-time timers depend on
       .select(col("__id"), col("__ts"), col("__bands"), col("__payload"),
         posexplode(col("__bands")).as(Seq("__band_idx", "__band_key")))
 

@@ -23,6 +23,29 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     assert(orphans.isEmpty, s"records with no runner: $orphans")
   }
 
+  test("the library reads exactly one spark.graft conf") {
+    // a conf that picks between two code paths doubles what must be
+    // kept correct; a second path stays only with a measurement that
+    // shows it wins. cc.localEdgeLimit is the one survivor: the code
+    // picks the path from the observed edge count, and the conf is how
+    // specs reach the distributed loop on a small graph
+    val literal = "\"(spark\\.graft\\.[^\"]*)\"".r
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"no sources at ${root.getAbsolutePath}")
+    val confs = scalaFiles(root).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try literal.findAllMatchIn(src.mkString).map(_.group(1)).toList
+      finally src.close()
+    }.toSet
+    assert(confs == Set("spark.graft.cc.localEdgeLimit"),
+      s"spark.graft confs read by the library: $confs")
+  }
+
   test("entry() returns rows (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -100,7 +100,7 @@ class ExactWindowSpec extends AnyFunSuite with SparkSpec {
     val input = MemoryStream[Measurement](spark)
     val src = input.toDF
       .withColumn("ts", timestamp_millis($"occurred_at_ms"))
-    val out = ExactWindow.slidingRows(src, Seq("sensor_name"), "ts",
+    val out = ExactWindow.slidingPanes(src, Seq("sensor_name"), "ts",
       lengthMs = 10000L, slideMs = 10000L,
       aggs = Seq(
         ExactWindow.ExactAgg[String, Map[String, Long], Map[String, Long]](
@@ -137,7 +137,7 @@ class ExactWindowSpec extends AnyFunSuite with SparkSpec {
       .withColumn("ts", timestamp_millis($"occurred_at_ms"))
       // second key column with a non-string type
       .withColumn("bucket", (col("reading") >= 10).cast("int"))
-    val out = ExactWindow.slidingRows(src, Seq("sensor_name", "bucket"),
+    val out = ExactWindow.slidingPanes(src, Seq("sensor_name", "bucket"),
       "ts", lengthMs = 10000L, slideMs = 10000L,
       aggs = Seq(ExactWindow.ExactAgg.sum("total", "reading")))
     val q = out.writeStream.outputMode("append")
@@ -156,63 +156,31 @@ class ExactWindowSpec extends AnyFunSuite with SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState tier emits identically to the timeout tier") {
-    val data = Seq(Measurement(1000, "x", 1.0), Measurement(2500, "x", 3.0),
-      Measurement(7000, "y", 7.0), Measurement(12000, "x", 5.0),
-      Measurement(50000, "z", 0.0))
-    def run(useTws: Boolean, name: String): Set[(String, Long, Long, Double)] = {
-      val input = MemoryStream[Measurement](spark)
-      val src = input.toDF
-        .withColumn("ts", timestamp_millis($"occurred_at_ms"))
-      val out = ExactWindow.sliding(src, "sensor_name", "ts", "reading",
-        lengthMs = 10000L, slideMs = 5000L,
-        useTransformWithState = useTws)
-      val q = out.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try {
-        input.addData(data: _*)
-        q.processAllAvailable()
-        spark.table(name)
-          .select($"group", $"window_start_time".cast("long").as("ws"),
-            $"n", $"sum")
-          .as[(String, Long, Long, Double)].collect().toSet
-      } finally q.stop()
-    }
-    val viaTimeout = run(useTws = false, "exact_tier_a")
-    val viaTws = run(useTws = true, "exact_tier_b")
-    assert(viaTws == viaTimeout,
-      s"tiers diverged:\n timeout=$viaTimeout\n tws=$viaTws")
-    assert(viaTimeout.nonEmpty, "fixture must close at least one window")
-  }
-
   test("ungrouped/global windows: empty groupCols keys frames on the " +
-      "window start alone, both tiers") {
+      "window start alone") {
     // mirrors the reference's ungrouped operator pair (WindowAggStream
     // partial → FullWindowAggStream final, continuous/streaming_window
     // .rs:640-828, :882-1035): no group key, one frame per window start
     val data = Seq(Measurement(1000, "x", 1.0), Measurement(2500, "y", 3.0),
       Measurement(9999, "z", 7.0), Measurement(12000, "x", 5.0),
       Measurement(50000, "w", 0.0))
-    def run(useTws: Boolean, name: String): Set[(Long, Long, Long, Double)] = {
-      val input = MemoryStream[Measurement](spark)
-      val src = input.toDF
-        .withColumn("ts", timestamp_millis($"occurred_at_ms"))
-      val out = ExactWindow.slidingRows(src, Seq.empty, "ts",
-        lengthMs = 10000L, slideMs = 10000L,
-        aggs = Seq(ExactWindow.ExactAgg.count("n", "reading"),
-          ExactWindow.ExactAgg.sum("sum", "reading")),
-        useTransformWithState = useTws)
-      val q = out.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try {
-        input.addData(data: _*)
-        q.processAllAvailable()
-        spark.table(name)
-          .select($"window_start_time".cast("long").as("ws"),
-            $"window_end_time".cast("long").as("we"), $"n", $"sum")
-          .as[(Long, Long, Long, Double)].collect().toSet
-      } finally q.stop()
-    }
+    val input = MemoryStream[Measurement](spark)
+    val src = input.toDF
+      .withColumn("ts", timestamp_millis($"occurred_at_ms"))
+    val out = ExactWindow.slidingPanes(src, Seq.empty, "ts",
+      lengthMs = 10000L, slideMs = 10000L,
+      aggs = Seq(ExactWindow.ExactAgg.count("n", "reading"),
+        ExactWindow.ExactAgg.sum("sum", "reading")))
+    val q = out.writeStream.outputMode("append")
+      .format("memory").queryName("exact_global").start()
+    val got = try {
+      input.addData(data: _*)
+      q.processAllAvailable()
+      spark.table("exact_global")
+        .select($"window_start_time".cast("long").as("ws"),
+          $"window_end_time".cast("long").as("we"), $"n", $"sum")
+        .as[(Long, Long, Long, Double)].collect().toSet
+    } finally q.stop()
     // built-in global-window semantics on the same batch (q24 shape),
     // restricted to windows the 50s watermark has closed
     val expected = data.toDF("ms", "g", "v")
@@ -223,11 +191,8 @@ class ExactWindowSpec extends AnyFunSuite with SparkSpec {
         $"window.end".cast("long").as("we"), $"n", $"sum")
       .as[(Long, Long, Long, Double)].collect().toSet
       .filter(_._1 < 40)
-    val viaTimeout = run(useTws = false, "exact_global_a")
-    val viaTws = run(useTws = true, "exact_global_b")
-    assert(viaTimeout == expected,
-      s"global frames must match built-in semantics: $viaTimeout vs $expected")
-    assert(viaTws == viaTimeout, "tiers must agree on the ungrouped form")
+    assert(got == expected,
+      s"global frames must match built-in semantics: $got vs $expected")
     assert(expected == Set((0L, 10L, 3L, 11.0), (10L, 20L, 1L, 5.0)))
   }
 
@@ -236,8 +201,8 @@ class ExactWindowSpec extends AnyFunSuite with SparkSpec {
     val input = MemoryStream[NullableMeasurement](spark)
     val src = input.toDF
       .withColumn("ts", timestamp_millis($"occurred_at_ms"))
-    // slidingRows directly — no sliding()-preset null pre-filter
-    val out = ExactWindow.slidingRows(src, Seq("sensor_name"), "ts",
+    // slidingPanes directly — no sliding()-preset null pre-filter
+    val out = ExactWindow.slidingPanes(src, Seq("sensor_name"), "ts",
       lengthMs = 10000L, slideMs = 10000L,
       aggs = Seq(ExactWindow.ExactAgg.count("n", "reading"),
         ExactWindow.ExactAgg.sum("s", "reading"),
@@ -266,115 +231,126 @@ class ExactWindowSpec extends AnyFunSuite with SparkSpec {
     } finally q.stop()
   }
 
-  test("slidingPanes emits identically to the explode-form slidingRows") {
+  test("slidingPanes matches built-in window() + udaf at a 12:1 " +
+      "length/slide ratio") {
     // the pane layer is a pure cost optimization — 1× shuffle rows and
     // length/slide-fold fewer state rows — so its output must be
-    // row-identical to the explode form on a fixture with out-of-order
-    // rows, multiple groups, a merge-exercising map-state UDAF, and a
-    // 12:1 length/slide ratio (60s windows sliding by 5s)
+    // row-identical to Spark's built-in window() aggregate on a fixture
+    // with out-of-order rows, multiple groups, a merge-exercising
+    // map-state UDAF, and a 12:1 length/slide ratio (60s windows
+    // sliding by 5s)
     val data = Seq(
       Measurement(11000, "x", 1.0), Measurement(4000, "x", 3.0),
       Measurement(58000, "y", 7.0), Measurement(62000, "x", 5.0),
       Measurement(31000, "y", 1.0), Measurement(31000, "x", 1.0),
       Measurement(300000, "z", 0.0))
-    def aggs() = Seq(
-      ExactWindow.ExactAgg.count("n", "reading"),
-      ExactWindow.ExactAgg.sum("sum", "reading"),
-      ExactWindow.ExactAgg.min("mn", "reading"),
-      ExactWindow.ExactAgg.avg("av", "reading"),
-      ExactWindow.ExactAgg[String, Map[String, Long], Map[String, Long]](
-        "by_value", _.getAs[Double]("reading").toString,
-        new graft.operators.Udafs.CountByValue,
-        org.apache.spark.sql.types.MapType(
-          org.apache.spark.sql.types.StringType,
-          org.apache.spark.sql.types.LongType)))
-    def run(pane: Boolean, name: String)
-        : Set[(String, Long, Long, Long, Double, Double, Double,
-          Map[String, Long])] = {
-      val input = MemoryStream[Measurement](spark)
-      val src = input.toDF
-        .withColumn("ts", timestamp_millis($"occurred_at_ms"))
-      val out =
-        if (pane) ExactWindow.slidingPanes(src, Seq("sensor_name"), "ts",
-          lengthMs = 60000L, slideMs = 5000L, aggs = aggs())
-        else ExactWindow.slidingRows(src, Seq("sensor_name"), "ts",
-          lengthMs = 60000L, slideMs = 5000L, aggs = aggs())
-      val q = out.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try {
-        // two batches so pane partials cross a micro-batch boundary
-        input.addData(data.take(3): _*)
-        q.processAllAvailable()
-        input.addData(data.drop(3): _*)
-        q.processAllAvailable()
-        spark.table(name)
-          .select($"sensor_name", $"window_start_time".cast("long").as("ws"),
-            $"window_end_time".cast("long").as("we"), $"n", $"sum",
-            $"mn", $"av", $"by_value")
-          .as[(String, Long, Long, Long, Double, Double, Double,
-            Map[String, Long])]
-          .collect().toSet
-      } finally q.stop()
-    }
-    val viaExplode = run(pane = false, "exact_pane_a")
-    val viaPanes = run(pane = true, "exact_pane_b")
-    assert(viaPanes == viaExplode,
-      s"pane form diverged:\n explode=${viaExplode.size} rows" +
-        s"\n panes=${viaPanes.size} rows" +
-        s"\n missing=${(viaExplode -- viaPanes).take(3)}" +
-        s"\n extra=${(viaPanes -- viaExplode).take(3)}")
-    assert(viaExplode.size > 30,
+    val input = MemoryStream[Measurement](spark)
+    val src = input.toDF
+      .withColumn("ts", timestamp_millis($"occurred_at_ms"))
+    val out = ExactWindow.slidingPanes(src, Seq("sensor_name"), "ts",
+      lengthMs = 60000L, slideMs = 5000L, aggs = Seq(
+        ExactWindow.ExactAgg.count("n", "reading"),
+        ExactWindow.ExactAgg.sum("sum", "reading"),
+        ExactWindow.ExactAgg.min("mn", "reading"),
+        ExactWindow.ExactAgg.avg("av", "reading"),
+        ExactWindow.ExactAgg[String, Map[String, Long], Map[String, Long]](
+          "by_value", _.getAs[Double]("reading").toString,
+          new graft.operators.Udafs.CountByValue,
+          org.apache.spark.sql.types.MapType(
+            org.apache.spark.sql.types.StringType,
+            org.apache.spark.sql.types.LongType))))
+    val q = out.writeStream.outputMode("append")
+      .format("memory").queryName("exact_pane_12").start()
+    val got = try {
+      // two batches so pane partials cross a micro-batch boundary
+      input.addData(data.take(3): _*)
+      q.processAllAvailable()
+      input.addData(data.drop(3): _*)
+      q.processAllAvailable()
+      spark.table("exact_pane_12")
+        .select($"sensor_name", $"window_start_time".cast("long").as("ws"),
+          $"window_end_time".cast("long").as("we"), $"n", $"sum",
+          $"mn", $"av", $"by_value")
+        .as[(String, Long, Long, Long, Double, Double, Double,
+          Map[String, Long])]
+        .collect().toSet
+    } finally q.stop()
+    // batch 2 arrives under the 58s watermark of batch 1, so Spark's
+    // late-row filter drops its two 31s rows before the operator
+    val accepted = data.take(3) ++ data.drop(3).filter(_.occurred_at_ms > 58000)
+    val byValue = udaf(new graft.operators.Udafs.CountByValue,
+      org.apache.spark.sql.Encoders.STRING)
+    val expected = accepted.toDF
+      .withColumn("ts", timestamp_millis($"occurred_at_ms"))
+      .groupBy($"sensor_name", window($"ts", "60 seconds", "5 seconds"))
+      .agg(count($"reading").as("n"), sum($"reading").as("sum"),
+        min($"reading").as("mn"), avg($"reading").as("av"),
+        byValue($"reading".cast("string")).as("by_value"))
+      .select($"sensor_name", $"window.start".cast("long").as("ws"),
+        $"window.end".cast("long").as("we"), $"n", $"sum", $"mn", $"av",
+        $"by_value")
+      .as[(String, Long, Long, Long, Double, Double, Double,
+        Map[String, Long])]
+      .collect().toSet
+      .filter(_._3 <= 300) // windows the 300s watermark has closed
+    assert(got == expected,
+      s"pane form diverged:\n built-in=${expected.size} rows" +
+        s"\n panes=${got.size} rows" +
+        s"\n missing=${(expected -- got).take(3)}" +
+        s"\n extra=${(got -- expected).take(3)}")
+    assert(expected.size > 30,
       "fixture must close a meaningful number of 12-pane windows")
   }
 
   test("slidingPanes handles non-multiple slides on the gcd pane grid") {
     // 7s windows sliding by 3s: panes live on the gcd grid (1s, 7 per
-    // window), window starts on the 3s slide grid — the general shape
-    // the slide-aligned pane tier used to reject outright
+    // window), window starts on the 3s slide grid — checked against
+    // Spark's built-in window() on the same rows
     val data = Seq(
       Measurement(500, "x", 1.0), Measurement(2500, "x", 3.0),
       Measurement(4100, "y", 7.0), Measurement(6900, "x", 5.0),
       Measurement(9300, "y", 1.0), Measurement(12800, "x", 2.0),
       Measurement(15100, "y", 4.0), Measurement(90000, "z", 0.0))
-    def aggs() = Seq(
-      ExactWindow.ExactAgg.count("n", "reading"),
-      ExactWindow.ExactAgg.sum("sum", "reading"),
-      ExactWindow.ExactAgg.max("mx", "reading"))
-    def run(pane: Boolean, name: String)
-        : Set[(String, Long, Long, Long, Double, Double)] = {
-      val input = MemoryStream[Measurement](spark)
-      val src = input.toDF
-        .withColumn("ts", timestamp_millis($"occurred_at_ms"))
-      val out =
-        if (pane) ExactWindow.slidingPanes(src, Seq("sensor_name"), "ts",
-          lengthMs = 7000L, slideMs = 3000L, aggs = aggs())
-        else ExactWindow.slidingRows(src, Seq("sensor_name"), "ts",
-          lengthMs = 7000L, slideMs = 3000L, aggs = aggs())
-      val q = out.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try {
-        // split across batches so gcd-pane partials cross a micro-batch
-        // boundary and mid-stream timers fire before the closer row
-        input.addData(data.take(4): _*)
-        q.processAllAvailable()
-        input.addData(data.drop(4): _*)
-        q.processAllAvailable()
-        spark.table(name)
-          .select($"sensor_name", $"window_start_time".cast("long").as("ws"),
-            $"window_end_time".cast("long").as("we"), $"n", $"sum", $"mx")
-          .as[(String, Long, Long, Long, Double, Double)]
-          .collect().toSet
-      } finally q.stop()
-    }
-    val viaExplode = run(pane = false, "exact_gcd_a")
-    val viaPanes = run(pane = true, "exact_gcd_b")
-    assert(viaPanes == viaExplode,
-      s"gcd pane form diverged:\n missing=${(viaExplode -- viaPanes).take(5)}" +
-        s"\n extra=${(viaPanes -- viaExplode).take(5)}")
-    assert(viaExplode.size > 10,
+    val input = MemoryStream[Measurement](spark)
+    val src = input.toDF
+      .withColumn("ts", timestamp_millis($"occurred_at_ms"))
+    val out = ExactWindow.slidingPanes(src, Seq("sensor_name"), "ts",
+      lengthMs = 7000L, slideMs = 3000L, aggs = Seq(
+        ExactWindow.ExactAgg.count("n", "reading"),
+        ExactWindow.ExactAgg.sum("sum", "reading"),
+        ExactWindow.ExactAgg.max("mx", "reading")))
+    val q = out.writeStream.outputMode("append")
+      .format("memory").queryName("exact_gcd").start()
+    val got = try {
+      // split across batches so gcd-pane partials cross a micro-batch
+      // boundary and mid-stream timers fire before the closer row
+      input.addData(data.take(4): _*)
+      q.processAllAvailable()
+      input.addData(data.drop(4): _*)
+      q.processAllAvailable()
+      spark.table("exact_gcd")
+        .select($"sensor_name", $"window_start_time".cast("long").as("ws"),
+          $"window_end_time".cast("long").as("we"), $"n", $"sum", $"mx")
+        .as[(String, Long, Long, Long, Double, Double)]
+        .collect().toSet
+    } finally q.stop()
+    val expected = data.toDF
+      .withColumn("ts", timestamp_millis($"occurred_at_ms"))
+      .groupBy($"sensor_name", window($"ts", "7 seconds", "3 seconds"))
+      .agg(count($"reading").as("n"), sum($"reading").as("sum"),
+        max($"reading").as("mx"))
+      .select($"sensor_name", $"window.start".cast("long").as("ws"),
+        $"window.end".cast("long").as("we"), $"n", $"sum", $"mx")
+      .as[(String, Long, Long, Long, Double, Double)]
+      .collect().toSet
+      .filter(_._3 <= 90) // windows the 90s watermark has closed
+    assert(got == expected,
+      s"gcd pane form diverged:\n missing=${(expected -- got).take(5)}" +
+        s"\n extra=${(got -- expected).take(5)}")
+    assert(expected.size > 10,
       "fixture must close a meaningful number of 7:3 windows")
     // window grid sanity: every start is slide-aligned, length exact
-    viaExplode.foreach { case (_, ws, we, _, _, _) =>
+    got.foreach { case (_, ws, we, _, _, _) =>
       assert(we - ws == 7 && math.floorMod(ws, 3) == 0,
         s"window [$ws,$we) must be 7s long on the 3s slide grid")
     }

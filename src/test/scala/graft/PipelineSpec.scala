@@ -3768,18 +3768,6 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
         (if (r.isNullAt(0)) null else r.getString(0)) ->
           ((r.getLong(1), r.getLong(2)))).toMap
     assert(got13 == got)
-    // round 17: iterations ≥ 2 fold parameters in as literal
-    // when-chains by default; the broadcast-join path (forced via
-    // literalGroupLimit = 0) must produce the identical fits
-    spark.conf.set("spark.graft.calibrate.literalGroupLimit", "0")
-    try {
-      val gotJoin = TextAnalysis.calibrateLogitsBy(df, "y", "s",
-        Seq("src"), iters = 3, lr = 10.0).collect().map(r =>
-          (if (r.isNullAt(0)) null else r.getString(0)) ->
-            ((r.getLong(1), r.getLong(2)))).toMap
-      assert(gotJoin == got,
-        "literal-fold path must equal the broadcast-join path")
-    } finally spark.conf.unset("spark.graft.calibrate.literalGroupLimit")
     // calibratedProbBy: the group's own pair, the exact
     // calibratedProb arithmetic; 'c' (unfitted) reads NULL
     val probs = TextAnalysis.calibratedProbBy(df, calib, "s",

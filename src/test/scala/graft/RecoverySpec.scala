@@ -173,53 +173,6 @@ class RecoverySpec extends AnyFunSuite with SparkSpec {
       ("uniqueness(sensor_name)", 0.75, false)))
   }
 
-  test("ExactWindow transformWithState tier survives a restart") {
-    val dir = Files.createTempDirectory("graft-recovery-tws").toFile
-    val inputDir = new java.io.File(dir, "input"); inputDir.mkdirs()
-    val ckpt = new java.io.File(dir, "ckpt").getAbsolutePath
-    val outDir = new java.io.File(dir, "out").getAbsolutePath
-
-    def writeBatch(rows: Seq[(Long, String, Double)]): Unit =
-      rows.toDF("occurred_at_ms", "sensor_name", "reading")
-        .coalesce(1).write.mode("append").parquet(inputDir.getAbsolutePath)
-
-    def startQuery() = {
-      val src = spark.readStream.schema(
-        spark.read.parquet(inputDir.getAbsolutePath).schema)
-        .parquet(inputDir.getAbsolutePath)
-        .withColumn("ts", timestamp_millis($"occurred_at_ms"))
-      graft.streaming.ExactWindow
-        .sliding(src, "sensor_name", "ts", "reading", 10000L, 10000L,
-          useTransformWithState = true)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .option("path", outDir)
-        .format("parquet").start()
-    }
-
-    writeBatch(Seq((1000L, "a", 10.0), (4000L, "a", 20.0)))
-    val q1 = startQuery()
-    q1.processAllAvailable()
-    q1.stop()
-    assert(spark.read.parquet(outDir).isEmpty,
-      "no emission before watermark passes window end")
-
-    // while DOWN: one more row for the open window + watermark push;
-    // the registered timer AND the frame buffers must both be restored
-    writeBatch(Seq((8000L, "a", 30.0), (30000L, "z", 0.0)))
-
-    val q2 = startQuery()
-    q2.processAllAvailable()
-    q2.stop()
-    val rows = spark.read.parquet(outDir)
-      .filter($"group" === "a").collect()
-    assert(rows.length == 1)
-    assert(rows(0).getAs[Long]("n") == 3 &&
-      rows(0).getAs[Double]("sum") == 60.0,
-      "recovered transformWithState state must combine pre- and " +
-        s"post-restart rows — got ${rows.mkString}")
-  }
-
   test("ExactWindow ungrouped/global form survives a restart") {
     val dir = Files.createTempDirectory("graft-recovery-global").toFile
     val inputDir = new java.io.File(dir, "input"); inputDir.mkdirs()
@@ -236,7 +189,7 @@ class RecoverySpec extends AnyFunSuite with SparkSpec {
         .parquet(inputDir.getAbsolutePath)
         .withColumn("ts", timestamp_millis($"occurred_at_ms"))
       graft.streaming.ExactWindow
-        .slidingRows(src, Seq.empty, "ts", 10000L, 10000L,
+        .slidingPanes(src, Seq.empty, "ts", 10000L, 10000L,
           Seq(graft.streaming.ExactWindow.ExactAgg.count("n", "reading"),
             graft.streaming.ExactWindow.ExactAgg.sum("sum", "reading")))
         .writeStream.outputMode("append")
@@ -370,51 +323,5 @@ class RecoverySpec extends AnyFunSuite with SparkSpec {
       rows(0).getAs[Double]("sum") == 60.0,
       "recovered pane partials must combine with post-restart rows — " +
         s"got ${rows.mkString}")
-  }
-
-  test("ExactWindow flatMapGroupsWithState state survives a restart") {
-    val dir = Files.createTempDirectory("graft-recovery-exact").toFile
-    val inputDir = new java.io.File(dir, "input"); inputDir.mkdirs()
-    val ckpt = new java.io.File(dir, "ckpt").getAbsolutePath
-    val outDir = new java.io.File(dir, "out").getAbsolutePath
-
-    def writeBatch(rows: Seq[(Long, String, Double)]): Unit =
-      rows.toDF("occurred_at_ms", "sensor_name", "reading")
-        .coalesce(1).write.mode("append").parquet(inputDir.getAbsolutePath)
-
-    def startQuery() = {
-      val src = spark.readStream.schema(
-        spark.read.parquet(inputDir.getAbsolutePath).schema)
-        .parquet(inputDir.getAbsolutePath)
-        .withColumn("ts", timestamp_millis($"occurred_at_ms"))
-      graft.streaming.ExactWindow
-        .tumbling(src, "sensor_name", "ts", "reading", 10000L)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .option("path", outDir)
-        .format("parquet").start()
-    }
-
-    // pre-restart rows accumulate custom per-window state
-    writeBatch(Seq((1000L, "a", 10.0), (4000L, "a", 20.0)))
-    val q1 = startQuery()
-    q1.processAllAvailable()
-    q1.stop()
-    assert(spark.read.parquet(outDir).isEmpty,
-      "no emission before watermark passes window end")
-
-    // while DOWN: one more row for the open window + watermark push
-    writeBatch(Seq((8000L, "a", 30.0), (30000L, "z", 0.0)))
-
-    val q2 = startQuery()
-    q2.processAllAvailable()
-    q2.stop()
-    val rows = spark.read.parquet(outDir)
-      .filter($"group" === "a").collect()
-    assert(rows.length == 1)
-    assert(rows(0).getAs[Long]("n") == 3 &&
-      rows(0).getAs[Double]("sum") == 60.0,
-      "recovered custom state must combine pre- and post-restart rows" +
-        s" — got ${rows.mkString}")
   }
 }

@@ -232,6 +232,40 @@ class SketchesSpec extends AnyFunSuite with SparkSpec {
     assert(got == Seq(2.0, 3.0, 5.0))
   }
 
+  test("quantilesDisc fails loudly when its input recomputes " +
+      "differently between the two passes") {
+    // a nondeterministic key: each stage that evaluates it takes the
+    // next generation (the range sampler's is 0); even generations put
+    // every row in group "a", odd ones split by parity, so a recomputed
+    // map stage moves rows between groups. The generation map is a JVM
+    // global: tasks deserialize their own copy of anything captured
+    import SketchesSpec.gens
+    gens.synchronized(gens.clear())
+    val key = udf { (v: Long) =>
+      val sid = org.apache.spark.TaskContext.get().stageId()
+      val gen = gens.synchronized(gens.getOrElseUpdate(sid, gens.size))
+      if (gen % 2 == 0 || v % 2 == 0) "a" else "b"
+    }.asNondeterministic()
+    val df = spark.range(0, 400, 1, 4)
+      .select(key(col("id")).as("g"), col("id").cast("double").as("v"))
+    // control: with the shuffle output kept, both passes read the same
+    // rows and the answer comes back
+    assert(Sketches.quantilesDisc(df, "v", Seq("g"), Seq(0.5))
+      .count() > 0)
+    gens.synchronized(gens.clear())
+    // fault: pass 1's job drops the range shuffle's map outputs, so
+    // pass 2 recomputes them under a new key assignment
+    val hook = new org.apache.spark.sql.graftshim.DropShuffleOutputs
+    spark.sparkContext.addSparkListener(hook)
+    val e = try intercept[IllegalStateException] {
+      Sketches.quantilesDisc(df, "v", Seq("g"), Seq(0.5)).collect()
+    } finally spark.sparkContext.removeSparkListener(hook)
+    assert(e.getMessage.matches(
+      "(?s)groupedOrderStats: group List\\([ab]\\) in partition \\d+ " +
+        "counted \\d+ rows in pass 1 but \\d+ in pass 2.*"),
+      e.getMessage)
+  }
+
   test("kmv: map-side partial aggregation — plan has a partial stage") {
     // the whole point of the bounded-buffer aggregator at 100 TB:
     // each task reduces its partition to ≤ k longs BEFORE the
@@ -244,4 +278,12 @@ class SketchesSpec extends AnyFunSuite with SparkSpec {
     assert(plan.contains("partial_kmv_sketch") ||
       plan.toLowerCase.contains("partial"), plan)
   }
+}
+
+object SketchesSpec {
+  /** stage id → order in which the stage first evaluated the
+    * recompute spec's key UDF
+    */
+  val gens: scala.collection.mutable.Map[Int, Int] =
+    scala.collection.mutable.Map.empty
 }

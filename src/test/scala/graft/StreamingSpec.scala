@@ -102,39 +102,48 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     } finally q.stop()
   }
 
-  test("exactWindow fluent bridge: all four tiers run behind DataStream") {
+  // a's two rows and b's one, reduced per frame by the fluent bridges
+  private val exactData = Seq(Measurement(1000, "a", 1.0),
+    Measurement(4000, "a", 3.0), Measurement(8000, "b", 5.0),
+    Measurement(60000, "z", 0.0))
+  private def exactAggs = {
     import graft.streaming.ExactWindow.ExactAgg
-    val data = Seq(Measurement(1000, "a", 1.0), Measurement(4000, "a", 3.0),
-      Measurement(8000, "b", 5.0), Measurement(60000, "z", 0.0))
-    def run(tier: String, slide: Option[String]): Set[(String, Long, Double)] = {
-      val (input, ds) = measurementStream()
-      val q = ds.exactWindow(Seq("sensor_name"),
-          Seq(ExactAgg.count("n", "reading"), ExactAgg.sum("s", "reading")),
-          "10 seconds", slide, tier)
-        .sinkMemory(s"exact_fluent_$tier")
-      try {
-        input.addData(data: _*)
-        q.processAllAvailable()
-        val t = spark.table(s"exact_fluent_$tier")
-        // fixed tiers: compare the [0,10s) frame; session tier: the
-        // only closed sessions ARE a's and b's (z's stays open)
-        val scoped =
-          if (tier == "session") t
-          else t.filter($"window_start_time".cast("long") === 0)
-        scoped.select($"sensor_name", $"n", $"s")
-          .as[(String, Long, Double)].collect().toSet
-      } finally q.stop()
-    }
-    // every tier reduces a's two rows and b's one into its own frame
-    val expected = Set(("a", 2L, 4.0), ("b", 1L, 5.0))
-    for (tier <- Seq("timeout", "tws", "pane"))
-      assert(run(tier, Some("5 seconds")) == expected, s"tier $tier diverged")
-    // session tier: gap 10s chains a's rows, isolates b's
-    assert(run("session", None) == expected, "session tier diverged")
+    Seq(ExactAgg.count("n", "reading"), ExactAgg.sum("s", "reading"))
+  }
+
+  test("exactWindow fluent bridge: sliding panes run behind DataStream") {
+    val (input, ds) = measurementStream()
+    val q = ds.exactWindow(Seq("sensor_name"), exactAggs, "10 seconds",
+      Some("5 seconds")).sinkMemory("exact_fluent_pane")
+    try {
+      input.addData(exactData: _*)
+      q.processAllAvailable()
+      val got = spark.table("exact_fluent_pane")
+        .filter($"window_start_time".cast("long") === 0)
+        .select($"sensor_name", $"n", $"s")
+        .as[(String, Long, Double)].collect().toSet
+      assert(got == Set(("a", 2L, 4.0), ("b", 1L, 5.0)))
+    } finally q.stop()
     // non-fixed intervals rejected loudly at the bridge
     intercept[IllegalArgumentException] {
       DataStream.intervalMs("1 month")
     }
+  }
+
+  test("exactSessionWindow fluent bridge: gap-merged sessions run " +
+      "behind DataStream") {
+    val (input, ds) = measurementStream()
+    val q = ds.exactSessionWindow(Seq("sensor_name"), exactAggs,
+      "10 seconds").sinkMemory("exact_fluent_session")
+    try {
+      input.addData(exactData: _*)
+      q.processAllAvailable()
+      // gap 10s chains a's rows, isolates b's; z's session stays open
+      val got = spark.table("exact_fluent_session")
+        .select($"sensor_name", $"n", $"s")
+        .as[(String, Long, Double)].collect().toSet
+      assert(got == Set(("a", 2L, 4.0), ("b", 1L, 5.0)))
+    } finally q.stop()
   }
 
   test("stream-static join enriches rows (Joinable parity)") {
