@@ -11,6 +11,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    coalescing) is the 100TB safety net for every groupBy/join here.
   *  - UTC session timezone for deterministic timestamp semantics
   *    (oracle parity with DuckDB, which is timezone-naive).
+  *  - `fs.file.impl` / `fs.AbstractFileSystem.file.impl` point the
+  *    `file:` scheme at [[ForkFreeLocalFileSystem]] / [[ForkFreeLocalFs]]:
+  *    without the native-hadoop library, stock Hadoop spawns a `chmod`
+  *    per created file and a `readlink` per `FileContext` rename, ~60
+  *    processes per checkpointed micro-batch. `.crc` sidecars and
+  *    Spark's checkpoint checksums are unchanged. `FileSystem.CACHE`
+  *    is per JVM: a `file:` instance created before the first session
+  *    (from a conf without these keys) stays stock.
+  *  - RocksDB changelog checkpointing: a state commit writes one
+  *    changelog file instead of a snapshot + SST upload + zip + `rm -rf`
+  *    per batch; every 10th commit snapshots, and the maintenance thread
+  *    uploads it. Checkpoints written with it off resume with it on, and
+  *    back (RecoverySpec).
   */
 object Graft {
 
@@ -30,6 +43,11 @@ object Graft {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true")
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[ForkFreeLocalFs].getName)
       // testdata events.parquet carries TIMESTAMP(NANOS) which Spark has
       // no native type for; read as Long and normalize in table().
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

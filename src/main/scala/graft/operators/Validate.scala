@@ -531,7 +531,8 @@ object Validate {
     * silently skew every later median. The refusal is RACE-FREE
     * across concurrent writers: before appending, the run claims a
     * `_run-<md5(runId)>` marker file with create-exclusive
-    * semantics (atomic on HDFS and local filesystems; parquet
+    * semantics (atomic on HDFS and on `Graft.session`'s local
+    * filesystem, [[graft.ForkFreeRawLocalFileSystem]]; parquet
     * readers skip `_`-prefixed files) — of two jobs logging the
     * same runId simultaneously, exactly one wins the claim and the
     * other refuses, where a read-then-append check would let both
@@ -575,11 +576,12 @@ object Validate {
     // only the duplicate-claim failure maps to the "already logged"
     // refusal — a transient FS/permission IOException must surface
     // as itself, not masquerade as a duplicate run. The atomicity
-    // caveat: create(overwrite=false) is atomic on HDFS/local but
-    // check-then-put on object stores (S3A), where two simultaneous
-    // claims can both win; and a claimed-then-crashed run blocks its
-    // runId until the marker is deleted (which the message says how
-    // to do).
+    // caveat: create(overwrite=false) is atomic on HDFS and on
+    // Graft.session's local filesystem, but check-then-create on
+    // stock Hadoop's local one and check-then-put on object stores
+    // (S3A), where two simultaneous claims can both win; and a
+    // claimed-then-crashed run blocks its runId until the marker is
+    // deleted (which the message says how to do).
     val claim =
       try fs.create(marker, false)
       catch {

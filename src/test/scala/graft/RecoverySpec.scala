@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -323,5 +325,82 @@ class RecoverySpec extends AnyFunSuite with SparkSpec {
       rows(0).getAs[Double]("sum") == 60.0,
       "recovered pane partials must combine with post-restart rows — " +
         s"got ${rows.mkString}")
+  }
+
+  test("window checkpoints resume across a RocksDB changelog-checkpointing " +
+      "switch, off to on and on to off") {
+    val key =
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    val batches = Seq(
+      Seq((1000L, "a", 1.0), (2000L, "b", 2.0), (5000L, "a", 3.0),
+        (12000L, "a", 4.0)),
+      // 8 s is behind batch 1's 12 s watermark: dropped as late
+      Seq((15000L, "a", 5.0), (21000L, "b", 6.0), (8000L, "b", 7.0)),
+      Seq((25000L, "b", 8.0), (90000L, "z", 0.0)))
+
+    // Feeds the batches, one micro-batch each, through a 10 s window.
+    // With two settings the query stops after batch 2 and restarts
+    // from its checkpoint with the second one. Returns the closed
+    // windows and, per query run, the state files that run added.
+    def run(changelog: Boolean*) = {
+      val dir = Files.createTempDirectory("graft-recovery-changelog").toFile
+      val inputDir = new java.io.File(dir, "input"); inputDir.mkdirs()
+      val ckpt = new java.io.File(dir, "ckpt")
+      val outDir = new java.io.File(dir, "out").getAbsolutePath
+      def stateFiles(): Set[String] = {
+        val st = new java.io.File(ckpt, "state").toPath
+        if (!Files.exists(st)) Set.empty
+        else Files.walk(st).iterator.asScala.map(_.getFileName.toString)
+          .toSet
+      }
+      val parts =
+        if (changelog.size == 1) Seq(batches)
+        else Seq(batches.take(2), batches.drop(2))
+      val prev = spark.conf.get(key)
+      val added = changelog.zip(parts).map { case (on, part) =>
+        val before = stateFiles()
+        spark.conf.set(key, on.toString)
+        try {
+          val src = spark.readStream.schema(schema)
+            .parquet(inputDir.getAbsolutePath)
+          val q = DataStream(
+              src.withColumn("ts", timestamp_millis($"occurred_at_ms")), "ts")
+            .window(Seq($"sensor_name"),
+              Seq(count(lit(1)).as("n"), sum($"reading").as("s")),
+              "10 seconds")
+            .toDF.writeStream.outputMode("append")
+            .option("checkpointLocation", ckpt.getAbsolutePath)
+            .option("path", outDir)
+            .format("parquet").start()
+          try part.foreach { rows =>
+            rows.toDF("occurred_at_ms", "sensor_name", "reading")
+              .coalesce(1).write.mode("append")
+              .parquet(inputDir.getAbsolutePath)
+            q.processAllAvailable()
+          } finally q.stop()
+        } finally spark.conf.set(key, prev)
+        stateFiles() -- before
+      }
+      val windows = spark.read.parquet(outDir)
+        .select(($"window_start_time".cast("long")), $"sensor_name", $"n",
+          $"s")
+        .as[(Long, String, Long, Double)].collect().sorted.toList
+      (windows, added)
+    }
+
+    val (uninterrupted, _) = run(true)
+    assert(uninterrupted == List((0L, "a", 2L, 4.0), (0L, "b", 1L, 2.0),
+      (10L, "a", 2L, 9.0), (20L, "b", 2L, 14.0)))
+    Seq(Seq(false, true), Seq(true, false)).foreach { switch =>
+      val (windows, added) = run(switch: _*)
+      assert(windows == uninterrupted, s"changelog $switch")
+      // each run wrote its own format: changelog files, or zip snapshots
+      switch.zip(added).foreach { case (on, files) =>
+        assert(files.exists(_.endsWith(".changelog")) == on,
+          s"changelog $switch, run with $on added $files")
+        if (!on) assert(files.exists(_.endsWith(".zip")),
+          s"changelog $switch, run with $on added $files")
+      }
+    }
   }
 }
