@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.api.DataStream
+import graft.api.WindowShape.Fixed
 import graft.operators.{Dedup, DedupIndex, Drift, Similarity, TextAnalysis,
   Tokenizer}
 import graft.streaming.{ExactWindow, StreamingDedup}
@@ -393,12 +394,12 @@ object Bench {
     // (constant per window) vs the COUNT(DISTINCT) Spark rightly
     // refuses on streams
     "streaming_distinct_monitor" -> (e => clock(e.drain("bench_monitor",
-      e.events.distinctMonitor("user_id", "1 hour").df))),
+      e.events.distinctMonitor("user_id", Fixed("1 hour")).df))),
 
     // Streaming trending-items monitor: per-hour top event types by
     // Misra–Gries bounded summary
     "streaming_trending_monitor" -> (e => clock(e.drain("bench_trending",
-      e.events.trendingMonitor("event_type", "1 hour", k = 5).df))),
+      e.events.trendingMonitor("event_type", Fixed("1 hour"), k = 5).df))),
 
     // Streaming cross-drop overlap monitor: per-hour overlap of the
     // incoming users against a frozen prior-drop KMV sketch (built
@@ -411,7 +412,7 @@ object Bench {
       DedupIndex.writeKmv(priorDrop(e).select(col("user_id")),
         "user_id", idx, k = 8192)
       clock(e.drain("bench_overlap",
-        e.events.overlapMonitor("user_id", "1 hour", idx, k = 8192).df))
+        e.events.overlapMonitor("user_id", Fixed("1 hour"), idx, k = 8192).df))
     },
 
     // Streaming distribution-drift monitor: per-hour histogram of event
@@ -421,7 +422,7 @@ object Bench {
     "streaming_drift_monitor" -> { e =>
       val fracs = Drift.histFractions(priorDrop(e), "value", valueBounds).toSeq
       clock(e.drain("bench_drift",
-        e.events.driftMonitor("value", "1 hour", valueBounds, fracs).df))
+        e.events.driftMonitor("value", Fixed("1 hour"), valueBounds, fracs).df))
     },
 
     // Streaming embedding-centroid drift monitor: the embeddings table
@@ -436,7 +437,7 @@ object Bench {
         val src = e.stream("embeddings")
           .withColumn("ts", timestamp_millis(col("vec_id") * 100))
         e.drain("bench_embdrift", DataStream(src, "ts")
-          .embeddingDriftMonitor("embedding", "1 hour", baseVec).df)
+          .embeddingDriftMonitor("embedding", Fixed("1 hour"), baseVec).df)
       }
     },
 
@@ -453,7 +454,7 @@ object Bench {
       val fracs = Drift.histFractions(baseEv, "value", valueBounds).toSeq
       val cats = Drift.categoryFractions(baseEv, "event_type", topN = 3)
       clock(e.drain("bench_health", e.events.healthMonitor("user_id",
-        "1 hour",
+        Fixed("1 hour"),
         value = Some(Drift.ValueBaseline("value", valueBounds, fracs)),
         category = Some(Drift.CategoryBaseline("event_type", cats)),
         k = 8192).df))
@@ -469,7 +470,7 @@ object Bench {
         Completeness("value", 0.99),
         FracBetween("value", 0.0, 500.0, 0.95),
         Uniqueness("user_id", 0.2, k = 8192),
-        SizeAtLeast(1)), "1 hour").df))
+        SizeAtLeast(1)), Fixed("1 hour")).df))
     },
 
     // The custom exact-emission operator at a 12:1 length/slide ratio

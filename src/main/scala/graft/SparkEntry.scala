@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.api.WindowShape.{Fixed, Session}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -2530,7 +2531,7 @@ object SparkEntry {
     // spec-gated in StreamingSpec.
     "d38_distinct_monitor" -> ((s, d) => {
       val ds = api.DataStream(t(s, d, "events"), "ts")
-      ds.distinctMonitor("user_id", "1 hour", k = 8192).df
+      ds.distinctMonitor("user_id", Fixed("1 hour"), k = 8192).df
         .select(unix_millis(col("window_start_time"))
             .as("window_start_ms"),
           unix_millis(col("window_end_time")).as("window_end_ms"),
@@ -2546,7 +2547,7 @@ object SparkEntry {
     // dup rate spiked" shape. State stays bounded per (window, key).
     "d46_keyed_distinct_monitor" -> ((s, d) => {
       val ds = api.DataStream(t(s, d, "events"), "ts")
-      ds.distinctMonitor("user_id", "1 hour", k = 8192,
+      ds.distinctMonitor("user_id", Fixed("1 hour"), k = 8192,
           by = Seq("event_type")).df
         .select(unix_millis(col("window_start_time"))
             .as("window_start_ms"),
@@ -2574,7 +2575,7 @@ object SparkEntry {
     // 13.5 → 70.6 s with a spread here; values identical, cost not).
     "d39_session_distinct_monitor" -> ((s, d) => {
       val ds = api.DataStream(t(s, d, "events"), "ts")
-      ds.distinctMonitorSession("user_id", "15 minutes", k = 8192).df
+      ds.distinctMonitor("user_id", Session("15 minutes"), k = 8192).df
         .select(unix_millis(col("window_start_time"))
             .as("window_start_ms"),
           unix_millis(col("window_end_time")).as("window_end_ms"),
@@ -2604,7 +2605,7 @@ object SparkEntry {
           .select(col("user_id")),
         "user_id", tmp, k = 8192)
       api.DataStream(ev, "ts")
-        .overlapMonitor("user_id", "1 day", tmp, k = 8192).df
+        .overlapMonitor("user_id", Fixed("1 day"), tmp, k = 8192).df
         .select(unix_millis(col("window_start_time"))
             .as("window_start_ms"),
           unix_millis(col("window_end_time")).as("window_end_ms"),
@@ -2635,7 +2636,7 @@ object SparkEntry {
         ev.filter(unix_millis(col("ts")) < lit(1705276800000L)),
         "value", bounds)
       api.DataStream(ev, "ts")
-        .driftMonitor("value", "1 hour", bounds, fracs.toSeq).df
+        .driftMonitor("value", Fixed("1 hour"), bounds, fracs.toSeq).df
         .select(unix_millis(col("window_start_time"))
             .as("window_start_ms"),
           unix_millis(col("window_end_time")).as("window_end_ms"),
@@ -2655,7 +2656,7 @@ object SparkEntry {
         ev.filter(unix_millis(col("ts")) < lit(1705276800000L)),
         "event_type", topN = 3)
       api.DataStream(ev, "ts")
-        .categoryDriftMonitor("event_type", "1 hour", baseline).df
+        .categoryDriftMonitor("event_type", Fixed("1 hour"), baseline).df
         .select(unix_millis(col("window_start_time"))
             .as("window_start_ms"),
           unix_millis(col("window_end_time")).as("window_end_ms"),
@@ -2675,7 +2676,7 @@ object SparkEntry {
         ev.filter(unix_millis(col("ts")) < lit(1705276800000L)),
         "value", bounds)
       api.DataStream(ev, "ts")
-        .driftMonitorSession("value", "15 minutes", bounds,
+        .driftMonitor("value", Session("15 minutes"), bounds,
           fracs.toSeq).df
         .select(unix_millis(col("window_start_time"))
             .as("window_start_ms"),
@@ -2751,7 +2752,7 @@ object SparkEntry {
       val baseSketch = operators.DedupIndex
         .readKmv(s, tmp, k = 8192).head().getSeq[Long](0)
       api.DataStream(ev, "ts")
-        .healthMonitor("user_id", "1 hour",
+        .healthMonitor("user_id", Fixed("1 hour"),
           value = Some(operators.Drift.ValueBaseline("value",
             bounds, fracs.toSeq)),
           category = Some(operators.Drift.CategoryBaseline(
@@ -2789,7 +2790,7 @@ object SparkEntry {
         "value", bounds)
       // no spread — the d39 session-locality note
       api.DataStream(ev, "ts")
-        .healthMonitorSession("user_id", "15 minutes",
+        .healthMonitor("user_id", Session("15 minutes"),
           value = Some(operators.Drift.ValueBaseline("value",
             bounds, fracs.toSeq)),
           k = 8192).df

@@ -526,458 +526,255 @@ final case class DataStream(
     next(flattenWindow(agged))
   }
 
-  /** Streaming corpus-ingest QUALITY monitor: per event-time window,
-    * the row count, the KMV distinct estimate of `valueCol`
+  // --- the monitor family ---------------------------------------------
+  //
+  // Every monitor takes its window as one [[WindowShape]] value:
+  // `Fixed(length, slide)` for tumbling/sliding grids, `Session(gap)`
+  // for gap-merged activity bursts (a session closes after `gap` of
+  // silence). Every constituent aggregate (KMV sketches, conditional
+  // counts, vec_sum partials, Misra–Gries summaries, min/max) is
+  // mergeable, so per-window — or per OPEN session, where Spark's
+  // session state merges partials as sessions merge — state stays
+  // bounded, constant in ingest volume. `by` keys each window per
+  // tenant/source; keyed sessions merge per key. The streaming and
+  // batch spellings are the same code path.
+
+  /** Aggregate `aggs` per `shape` and per `by` key. */
+  private def aggregate(shape: WindowShape, by: Seq[String],
+                        aggs: Seq[Column]): DataStream = shape match {
+    case WindowShape.Fixed(length, slide) =>
+      window(by.map(col), aggs, length, slide)
+    case WindowShape.Session(gap) =>
+      sessionWindow(by.map(col), aggs, gap)
+  }
+
+  import DataStream.Stat
+
+  /** The monitor shape: `n_rows` plus every statistic's aggregates in
+    * ONE windowed aggregation, then window bounds, `by` keys, `n_rows`
+    * and every statistic's output columns, in order.
+    */
+  private def monitor(shape: WindowShape, by: Seq[String],
+                      stats: Seq[Stat]): DataStream =
+    aggregate(shape, by,
+      count(lit(1)).as("n_rows") +: stats.flatMap(_.aggs))
+      .select(Seq(col("window_start_time"), col("window_end_time")) ++
+        by.map(col) ++ (col("n_rows") +: stats.flatMap(_.cols)): _*)
+
+  private def kmvEstimate(k: Int): Column =
+    graft.operators.Sketches.kmvDistinct(col("__sk"), k)
+
+  /** KMV distinct estimate of `valueCol` from one ≤ k sketch `__sk`. */
+  private def distinctStat(valueCol: String, k: Int): Stat =
+    Stat(Seq(graft.operators.Sketches.kmvSketch(col(valueCol), k)
+        .as("__sk")),
+      Seq(round(kmvEstimate(k), 6).as("n_distinct_est")))
+
+  /** Duplication rate 1 − distinct/rows over [[distinctStat]]'s
+    * sketch — clamped at 0: the saturated-regime estimator's
+    * ~1/√(k−2) error can read a few % above n_rows, and a negative
+    * duplication RATE is nonsense for the alarm this feeds.
+    */
+  private def dupRateStat(k: Int): Stat =
+    Stat(Seq.empty, Seq(greatest(lit(0.0),
+      round(lit(1.0) - kmvEstimate(k) / col("n_rows"), 6)).as("dup_rate")))
+
+  /** Overlap of [[distinctStat]]'s sketch with a frozen prior-drop
+    * sketch: pure arithmetic against a ≤ k-long literal array.
+    */
+  private def overlapStat(o: graft.operators.Drift.OverlapBaseline,
+                          k: Int): Stat = {
+    require(o.sketch.size <= k,
+      s"baseline sketch holds ${o.sketch.size} values > this " +
+        s"monitor's k = $k — the frozen sketch must be built with " +
+        "the SAME k (DedupIndex.writeKmv/readKmv pin it)")
+    val est = kmvEstimate(k)
+    val inter = graft.operators.Sketches.kmvIntersect(col("__sk"),
+      typedLit(o.sketch), k)
+    Stat(Seq.empty, Seq(round(inter, 6).as("n_overlap_est"),
+      when(est === 0.0, lit(0.0)).otherwise(
+        least(lit(1.0), greatest(lit(0.0), round(inter / est, 6))))
+        .as("overlap_frac")))
+  }
+
+  /** Numeric value-distribution drift: B+1 bucket counts plus a
+    * non-null count; n_null/tvd/max_shift/psi.
+    */
+  private def valueStat(v: graft.operators.Drift.ValueBaseline,
+                        eps: Double, tag: String): Stat = {
+    import graft.operators.Drift
+    Stat(Drift.driftAggs(Drift.histBucket(col(v.valueCol), v.boundaries),
+        count(col(v.valueCol)), v.fracs.size, tag),
+      Drift.statCols(v.fracs, eps, tag, "", emitNull = true))
+  }
+
+  /** Categorical mix drift: one count per baseline category, nulls
+    * and unseen categories pooling under `__other__`.
+    */
+  private def categoryStat(c: graft.operators.Drift.CategoryBaseline,
+                           eps: Double, tag: String, outPrefix: String,
+                           emitNull: Boolean): Stat = {
+    import graft.operators.Drift
+    val cats = Drift.categoryWithOther(c.fracs)
+    Stat(Drift.driftAggs(Drift.categoryBucket(col(c.catCol),
+        cats.map(_._1)), count(lit(1)), cats.size, tag),
+      Drift.statCols(cats.map(_._2), eps, tag, outPrefix, emitNull))
+  }
+
+  /** Embedding-centroid drift: one vec_sum plus a non-null count. */
+  private def centroidStat(e: graft.operators.Drift.CentroidBaseline,
+                           tag: String, outPrefix: String): Stat = {
+    import graft.operators.Drift
+    Stat(Drift.centroidAggs(e.embCol, tag),
+      Drift.centroidStatCols(e.sumVec, tag, outPrefix))
+  }
+
+  /** Streaming corpus-ingest QUALITY monitor: per window, the row
+    * count, the KMV distinct estimate of `valueCol`
     * ([[graft.operators.Sketches]] — exact while a window holds
     * < k distinct values, ~1/√(k−2) error beyond), and the implied
     * duplication rate 1 − distinct/rows. The window's streaming
-    * state is ONE bounded ≤ k-long sketch buffer plus a count —
-    * constant per window regardless of ingest volume — where a true
-    * streaming `COUNT(DISTINCT)` would hold every distinct value in
-    * the state store (Spark rejects it on streams for exactly that
-    * reason). This is the "is today's crawl suddenly 40% duplicates"
-    * alarm, composing with the streaming dedup operators that answer
-    * WHICH rows to drop.
+    * state is ONE bounded ≤ k-long sketch buffer plus a count, where
+    * a true streaming `COUNT(DISTINCT)` would hold every distinct
+    * value in the state store (Spark rejects it on streams for
+    * exactly that reason). This is the "is today's crawl suddenly 40%
+    * duplicates" alarm, composing with the streaming dedup operators
+    * that answer WHICH rows to drop; over `Session(gap)` it is the
+    * "crawl burst" shape, one row per activity burst.
     */
-  def distinctMonitor(valueCol: String, length: String,
-                      slide: Option[String] = None,
+  def distinctMonitor(valueCol: String, window: WindowShape,
                       k: Int = 1024,
                       by: Seq[String] = Seq.empty): DataStream =
-    finishDistinctMonitor(window(by.map(col),
-      distinctMonitorAggs(valueCol, k), length, slide), k, by)
-
-  /** [[distinctMonitor]] over gap-merged SESSION windows instead of a
-    * fixed grid — the "crawl burst" shape: one monitor row per
-    * activity burst (a session ends after `gap` of silence), carrying
-    * the burst's row count, KMV distinct estimate, and dup rate.
-    * Same bounded state story as the tumbling spelling: one ≤ k-long
-    * sketch buffer + a count per OPEN session; Spark's session state
-    * merges sketches as sessions merge ([[graft.operators.Sketches
-    * .kmvSketch]] partials compose), and a session's state is
-    * dropped once the watermark closes it.
-    */
-  def distinctMonitorSession(valueCol: String, gap: String,
-                             k: Int = 1024,
-                             by: Seq[String] = Seq.empty): DataStream =
-    finishDistinctMonitor(sessionWindow(
-      monitorSessionKeys(valueCol, by),
-      distinctMonitorAggs(valueCol, k), gap), k, by)
-
-  /** Streaming session aggregation must be keyed (Spark rejects the
-    * global form — "Global aggregation with session window … is not
-    * supported"), so the session monitors group on a CONSTANT key
-    * (dropped from the output by the finishers' explicit selects).
-    * The key must be NON-FOLDABLE: a plain literal is stripped from
-    * the grouping by `RemoveLiteralFromGroupExpressions` and the plan
-    * degenerates back to the rejected global form — hence the
-    * column-anchored always-zero spelling. Consequence at scale: all
-    * session-merge state rides one key — fine for these monitors
-    * because per-session state is one ≤ k sketch (not the ingest
-    * rows; partials still combine map-side). A per-tenant/per-source
-    * monitor passes real `by` columns instead — sessions then merge
-    * PER KEY (each tenant's bursts are its own), which both matches
-    * the semantics wanted and shards the session state.
-    */
-  private def monitorSessionKey(anchorCol: String): Seq[Column] =
-    Seq((xxhash64(col(anchorCol)) * lit(0)).as("__gk"))
-
-  private def monitorSessionKeys(anchorCol: String,
-                                 by: Seq[String]): Seq[Column] =
-    if (by.isEmpty) monitorSessionKey(anchorCol) else by.map(col)
+    monitor(window, by, Seq(distinctStat(valueCol, k), dupRateStat(k)))
 
   /** Streaming cross-drop overlap monitor — the "how much of today's
-    * crawl is last month's" alarm: per event-time window, the row
-    * count, the KMV distinct estimate of `valueCol`, the estimated
-    * overlap with a FROZEN prior-corpus sketch
-    * ([[graft.operators.DedupIndex.writeKmv]], built once at that
-    * drop's ingest), and the overlap fraction of this window's
-    * distinct values. Everything beyond the window's own sketch is
-    * arithmetic: the baseline rides along as a ≤ k-long literal
-    * array — the prior corpus is never rescanned and never joined —
-    * and streaming state stays ONE bounded sketch buffer plus a
-    * count per window, exactly [[distinctMonitor]]'s story. k is
-    * pinned by the baseline's sidecar (a mismatched k silently
-    * breaks the estimator, so it refuses like every index read).
-    * Estimates are exact in the unsaturated regime (k ≥ distinct of
-    * window ∪ baseline — the gate regime); beyond it each carries
-    * the ~1/√(k−2) KMV error, with `overlap_frac` clamped to [0, 1].
+    * crawl is last month's" alarm: per window, the row count, the KMV
+    * distinct estimate of `valueCol`, the estimated overlap with a
+    * FROZEN prior-corpus sketch ([[graft.operators.DedupIndex
+    * .writeKmv]], built once at that drop's ingest), and the overlap
+    * fraction of this window's distinct values. Everything beyond the
+    * window's own sketch is arithmetic: the baseline rides along as a
+    * ≤ k-long literal array — the prior corpus is never rescanned and
+    * never joined. k is pinned by the baseline's sidecar (a mismatched
+    * k silently breaks the estimator, so it refuses like every index
+    * read). Estimates are exact in the unsaturated regime (k ≥
+    * distinct of window ∪ baseline — the gate regime); beyond it each
+    * carries the ~1/√(k−2) KMV error, with `overlap_frac` clamped to
+    * [0, 1].
     */
-  def overlapMonitor(valueCol: String, length: String,
+  def overlapMonitor(valueCol: String, window: WindowShape,
                      baselinePath: String,
-                     slide: Option[String] = None,
                      k: Int = 1024,
                      by: Seq[String] = Seq.empty): DataStream = {
-    import graft.operators.{DedupIndex, Sketches}
-    val baseSketch: Seq[Long] =
-      DedupIndex.readKmv(df.sparkSession, baselinePath, k)
-        .head().getSeq[Long](0)
-    val base = typedLit(baseSketch)
-    val monitored = window(by.map(col),
-      distinctMonitorAggs(valueCol, k), length, slide)
-    val est = Sketches.kmvDistinct(col("__sk"), k)
-    val inter = Sketches.kmvIntersect(col("__sk"), base, k)
-    monitored.select(Seq(col("window_start_time"),
-      col("window_end_time")) ++ by.map(col) ++ Seq(
-      col("n_rows"), round(est, 6).as("n_distinct_est"),
-      round(inter, 6).as("n_overlap_est"),
-      when(est === 0.0, lit(0.0)).otherwise(
-        least(lit(1.0), greatest(lit(0.0), round(inter / est, 6))))
-        .as("overlap_frac")): _*)
+    val sketch = graft.operators.DedupIndex
+      .readKmv(df.sparkSession, baselinePath, k).head().getSeq[Long](0)
+    monitor(window, by, Seq(distinctStat(valueCol, k),
+      overlapStat(graft.operators.Drift.OverlapBaseline(sketch),
+        k)))
   }
 
   /** Streaming distribution-drift monitor — the "did the doc-length/
     * quality-score distribution shift" alarm that fires even when
     * row counts and dup rates look healthy (an upstream extractor
-    * change usually moves the SHAPE first): per event-time window,
-    * histogram `valueCol` against FROZEN baseline bucket
-    * `boundaries` ([[graft.operators.Drift.histBucket]] — B
-    * boundaries, B+1 buckets) and compare to the baseline's
-    * `baselineFracs` ([[graft.operators.Drift.histFractions]],
-    * computed once per baseline drop). Emits per window: n_rows,
-    * n_null (null values are EXCLUDED from the distribution and
-    * counted separately — a null surge is its own alarm, not
-    * bucket-0 traffic), `tvd` (total-variation distance,
-    * 0.5·Σ|p−b|), `max_shift` (worst single bucket |p−b|), and
-    * `psi` (population stability index, Σ(p−b)·ln((p+ε)/(b+ε)) —
-    * <0.1 stable / 0.1–0.25 moderate / >0.25 act). Streaming state
-    * per window is B+2 plain COUNTs — conditional counts compose
-    * map-side and are streaming-legal where COUNT(DISTINCT) is not —
-    * and the baseline rides as literals: no join, no second scan.
-    * All three stats are null for a window with zero non-null rows
-    * (it still EMITS — n_rows/n_null carry the alarm).
+    * change usually moves the SHAPE first): per window, histogram
+    * `valueCol` against FROZEN baseline bucket `boundaries`
+    * ([[graft.operators.Drift.histBucket]] — B boundaries, B+1
+    * buckets) and compare to the baseline's `baselineFracs`
+    * ([[graft.operators.Drift.histFractions]], or
+    * [[graft.operators.DedupIndex.readHist]] for a persisted
+    * baseline). Emits per window: n_rows, n_null (null values are
+    * EXCLUDED from the distribution and counted separately — a null
+    * surge is its own alarm, not bucket-0 traffic), `tvd`
+    * (total-variation distance, 0.5·Σ|p−b|), `max_shift` (worst
+    * single bucket |p−b|), and `psi` (population stability index,
+    * Σ(p−b)·ln((p+ε)/(b+ε)) — <0.1 stable / 0.1–0.25 moderate /
+    * >0.25 act). State per window is B+2 plain COUNTs and the
+    * baseline rides as literals: no join, no second scan. All three
+    * stats are null for a window with zero non-null rows (it still
+    * EMITS — n_rows/n_null carry the alarm).
     */
-  def driftMonitor(valueCol: String, length: String,
+  def driftMonitor(valueCol: String, window: WindowShape,
                    boundaries: Seq[Double], baselineFracs: Seq[Double],
-                   slide: Option[String] = None,
                    eps: Double = 1e-6,
-                   by: Seq[String] = Seq.empty): DataStream = {
-    import graft.operators.Drift
-    require(baselineFracs.size == boundaries.size + 1,
-      s"B boundaries define B+1 buckets: got ${boundaries.size} " +
-        s"boundaries but ${baselineFracs.size} baseline fractions")
-    require(baselineFracs.forall(f => f >= 0.0 && f <= 1.0),
-      s"baseline fractions must be in [0, 1], got $baselineFracs")
-    driftFinish(Drift.histBucket(col(valueCol), boundaries),
-      count(col(valueCol)), baselineFracs, length, slide, eps, by)
-  }
-
-  /** [[driftMonitor]] over gap-merged SESSION windows — per activity
-    * burst, the value distribution vs the frozen baseline ("did THIS
-    * crawl burst's length/score shape shift"). Same bounded-state
-    * story per OPEN session (B+2 plain counts merge as sessions
-    * merge); same constant-key caveat as
-    * [[distinctMonitorSession]]. The categorical and embedding
-    * twins compose the same way (their aggs are session-mergeable
-    * counts / vec_sum partials) — this numeric spelling is the gated
-    * shape.
-    */
-  def driftMonitorSession(valueCol: String, gap: String,
-                          boundaries: Seq[Double],
-                          baselineFracs: Seq[Double],
-                          eps: Double = 1e-6,
-                          by: Seq[String] = Seq.empty): DataStream = {
-    import graft.operators.Drift
-    require(baselineFracs.size == boundaries.size + 1,
-      s"B boundaries define B+1 buckets: got ${boundaries.size} " +
-        s"boundaries but ${baselineFracs.size} baseline fractions")
-    val monitored = sessionWindow(monitorSessionKeys(valueCol, by),
-      Drift.driftAggs(Drift.histBucket(col(valueCol), boundaries),
-        count(col(valueCol)), baselineFracs.size), gap)
-    monitored.select(Seq(col("window_start_time"),
-      col("window_end_time")) ++ by.map(col) ++ Seq(col("n_rows")) ++
-      Drift.statCols(baselineFracs, eps): _*)
-  }
-
-  /** [[driftMonitor]] against a PERSISTED baseline histogram
-    * ([[graft.operators.DedupIndex.writeHist]] — quantile boundaries
-    * + exact fractions, built once per baseline drop): boundaries
-    * and fractions load from the index (n_buckets pinned by its
-    * sidecar, mismatches refused) and ride as literals.
-    */
-  def driftMonitorFromIndex(valueCol: String, length: String,
-                            baselinePath: String, nBuckets: Int = 10,
-                            slide: Option[String] = None,
-                            eps: Double = 1e-6): DataStream = {
-    val (bounds, fracs) = graft.operators.DedupIndex
-      .readHist(df.sparkSession, baselinePath, nBuckets)
-    driftMonitor(valueCol, length, bounds, fracs, slide, eps)
-  }
+                   by: Seq[String] = Seq.empty): DataStream =
+    monitor(window, by, Seq(valueStat(
+      graft.operators.Drift.ValueBaseline(valueCol, boundaries,
+        baselineFracs), eps, tag = "")))
 
   /** Categorical twin of [[driftMonitor]] — the "did the language/
-    * event-type mix shift" alarm: per event-time window, the
-    * distribution of `catCol` over the baseline's category set
-    * (everything outside it — including nulls — pooling under
+    * event-type mix shift" alarm: per window, the distribution of
+    * `catCol` over the baseline's category set (everything outside
+    * it — including nulls — pooling under
     * [[graft.operators.Drift.OtherCategory]], mirroring
-    * [[graft.operators.Drift.categoryFractions]]) vs the frozen
-    * baseline fractions. Same bounded-state story: one COUNT per
-    * baseline category per window. Since nulls pool rather than
-    * drop, n_null is always 0 here and every stat covers all rows.
+    * [[graft.operators.Drift.categoryFractions]]; a persisted
+    * baseline loads with [[graft.operators.DedupIndex.readCats]]) vs
+    * the frozen baseline fractions. One COUNT per baseline category
+    * per window. Since nulls pool rather than drop, n_null is always
+    * 0 here and every stat covers all rows.
     */
-  def categoryDriftMonitor(catCol: String, length: String,
+  def categoryDriftMonitor(catCol: String, window: WindowShape,
                            baseline: Seq[(String, Double)],
-                           slide: Option[String] = None,
                            eps: Double = 1e-6,
-                           by: Seq[String] = Seq.empty): DataStream = {
-    import graft.operators.Drift
-    val withOther = Drift.categoryWithOther(baseline)
-    driftFinish(Drift.categoryBucket(col(catCol), withOther.map(_._1)),
-      count(lit(1)), withOther.map(_._2), length, slide, eps, by)
-  }
-
-  /** ONE-PASS composite ingest-health monitor — the whole monitor
-    * family's answer from a SINGLE windowed aggregation over a
-    * single scan of the stream: per event-time window (and per `by`
-    * key), the row count, KMV distinct estimate and dup rate of
-    * `distinctCol` ([[distinctMonitor]]'s columns), plus — for each
-    * baseline supplied — the numeric value-distribution drift
-    * (`n_null`/`tvd`/`max_shift`/`psi`, [[driftMonitor]]'s columns),
-    * the categorical mix drift (`cat_tvd`/`cat_max_shift`/`cat_psi`,
-    * [[categoryDriftMonitor]]'s), the embedding-centroid drift
-    * (`emb_n_null`/`emb_centroid_cos`/`emb_centroid_drift`,
-    * [[embeddingDriftMonitor]]'s), and the cross-drop overlap
-    * (`n_overlap_est`/`overlap_frac`, [[overlapMonitor]]'s — riding
-    * the SAME window sketch the distinct section maintains, so this
-    * section costs zero extra state; the frozen sketch must be
-    * built with this monitor's k over the same column). Every
-    * constituent aggregate is streaming-legal and mergeable (one
-    * bounded KMV sketch, conditional counts, one vec_sum), so the
-    * composite's per-window state is their SUM — still constant in
-    * ingest volume — while the quickstart's standalone monitor
-    * queries cost one scan (and one state store) EACH of the same
-    * drop. Identical column semantics to the standalone monitors,
-    * spec- and gate-pinned.
-    */
-  def healthMonitor(distinctCol: String, length: String,
-                    value: Option[graft.operators.Drift.ValueBaseline] = None,
-                    category: Option[graft.operators.Drift.CategoryBaseline] = None,
-                    embedding: Option[graft.operators.Drift.CentroidBaseline] = None,
-                    overlap: Option[graft.operators.Drift.OverlapBaseline] = None,
-                    slide: Option[String] = None,
-                    k: Int = 1024, eps: Double = 1e-6,
-                    by: Seq[String] = Seq.empty): DataStream =
-    healthMonitorImpl(distinctCol, length, value, category, embedding,
-      overlap, slide, k, eps, by, sessionGap = false)
-
-  /** [[healthMonitor]] over gap-merged SESSION windows — the whole
-    * composite per activity burst (`length` is the GAP): every
-    * constituent aggregate is session-mergeable (KMV sketches,
-    * conditional counts and vec_sum partials all combine as open
-    * sessions merge — the same merges the standalone session
-    * monitors ride), so per-OPEN-session state stays the bounded
-    * sum. Same constant-key caveat as [[distinctMonitorSession]]
-    * when `by` is empty; keyed sessions merge per tenant.
-    */
-  def healthMonitorSession(distinctCol: String, gap: String,
-                    value: Option[graft.operators.Drift.ValueBaseline] = None,
-                    category: Option[graft.operators.Drift.CategoryBaseline] = None,
-                    embedding: Option[graft.operators.Drift.CentroidBaseline] = None,
-                    overlap: Option[graft.operators.Drift.OverlapBaseline] = None,
-                    k: Int = 1024, eps: Double = 1e-6,
-                    by: Seq[String] = Seq.empty): DataStream =
-    healthMonitorImpl(distinctCol, gap, value, category, embedding,
-      overlap, None, k, eps, by, sessionGap = true)
-
-  private def healthMonitorImpl(distinctCol: String, length: String,
-                    value: Option[graft.operators.Drift.ValueBaseline],
-                    category: Option[graft.operators.Drift.CategoryBaseline],
-                    embedding: Option[graft.operators.Drift.CentroidBaseline],
-                    overlap: Option[graft.operators.Drift.OverlapBaseline],
-                    slide: Option[String],
-                    k: Int, eps: Double,
-                    by: Seq[String], sessionGap: Boolean): DataStream = {
-    import graft.operators.{Drift, Sketches}
-    value.foreach { v =>
-      require(v.fracs.size == v.boundaries.size + 1,
-        s"B boundaries define B+1 buckets: got ${v.boundaries.size} " +
-          s"boundaries but ${v.fracs.size} baseline fractions")
-      require(v.fracs.forall(f => f >= 0.0 && f <= 1.0),
-        s"baseline fractions must be in [0, 1], got ${v.fracs}")
-    }
-    val catsWithOther = category.map(c => Drift.categoryWithOther(c.fracs))
-    embedding.foreach(e =>
-      require(e.sumVec.nonEmpty, "baseline centroid is empty"))
-    overlap.foreach { o =>
-      require(o.sketch.nonEmpty, "baseline overlap sketch is empty")
-      require(o.sketch.size <= k,
-        s"baseline sketch holds ${o.sketch.size} values > this " +
-          s"monitor's k = $k — the frozen sketch must be built with " +
-          "the SAME k (DedupIndex.writeKmv/readKmv pin it)")
-    }
-    val vAggs = value.toSeq.flatMap { v =>
-      Drift.driftAggsTagged(
-        Drift.histBucket(col(v.valueCol), v.boundaries),
-        count(col(v.valueCol)), v.fracs.size, "v")
-    }
-    val cAggs = catsWithOther.toSeq.flatMap { cats =>
-      Drift.driftAggsTagged(
-        Drift.categoryBucket(col(category.get.catCol), cats.map(_._1)),
-        count(lit(1)), cats.size, "c")
-    }
-    val eAggs = embedding.toSeq.flatMap(e =>
-      Drift.centroidAggsTagged(e.embCol, "e"))
-    val aggs = Seq(count(lit(1)).as("n_rows"),
-      Sketches.kmvSketch(col(distinctCol), k).as("__sk")) ++
-      vAggs ++ cAggs ++ eAggs
-    val monitored =
-      if (sessionGap) sessionWindow(
-        monitorSessionKeys(distinctCol, by), aggs, length)
-      else window(by.map(col), aggs, length, slide)
-    val est = Sketches.kmvDistinct(col("__sk"), k)
-    val distinctCols = Seq(col("n_rows"),
-      round(est, 6).as("n_distinct_est"),
-      greatest(lit(0.0),
-        round(lit(1.0) - est / col("n_rows"), 6)).as("dup_rate"))
-    // overlap rides the SAME window sketch — pure arithmetic vs the
-    // frozen ≤ k-long literal, exactly overlapMonitor's tail
-    val oCols = overlap.toSeq.flatMap { o =>
-      val inter = Sketches.kmvIntersect(col("__sk"),
-        typedLit(o.sketch), k)
-      Seq(round(inter, 6).as("n_overlap_est"),
-        when(est === 0.0, lit(0.0)).otherwise(
-          least(lit(1.0), greatest(lit(0.0), round(inter / est, 6))))
-          .as("overlap_frac"))
-    }
-    val vCols = value.toSeq.flatMap(v =>
-      Drift.statColsTagged(v.fracs, eps, "v", "", emitNull = true))
-    val cCols = catsWithOther.toSeq.flatMap(cats =>
-      Drift.statColsTagged(cats.map(_._2), eps, "c", "cat_",
-        emitNull = false))
-    val eCols = embedding.toSeq.flatMap(e =>
-      Drift.centroidStatColsTagged(e.sumVec, "e", "emb_"))
-    monitored.select(Seq(col("window_start_time"),
-      col("window_end_time")) ++ by.map(col) ++ distinctCols ++
-      oCols ++ vCols ++ cCols ++ eCols: _*)
-  }
+                           by: Seq[String] = Seq.empty): DataStream =
+    monitor(window, by, Seq(categoryStat(
+      graft.operators.Drift.CategoryBaseline(catCol, baseline), eps,
+      tag = "", outPrefix = "", emitNull = true)))
 
   /** Streaming embedding-centroid drift monitor — the "did the
     * embedding distribution shift" alarm for multimodal/embedding
     * pipelines (an embedding-model swap or a source going off-topic
-    * moves the centroid long before scalar stats do): per event-time
-    * window, the cosine between the window's embedding centroid and
-    * a FROZEN baseline centroid ([[graft.operators.Drift.sumVector]],
-    * built once per baseline drop; cosine is scale-invariant so both
-    * sides ride SUM vectors and no mean is ever materialized).
-    * Streaming state per window is `dim` doubles + two counts
-    * ([[graft.expressions.VecSumAgg]] — map-side partials combine
-    * element-wise), constant in ingest volume. Null embeddings are
+    * moves the centroid long before scalar stats do): per window, the
+    * cosine between the window's embedding centroid and a FROZEN
+    * baseline centroid ([[graft.operators.Drift.sumVector]] or
+    * [[graft.operators.DedupIndex.readVec]]; cosine is
+    * scale-invariant so both sides ride SUM vectors and no mean is
+    * ever materialized). State per window is `dim` doubles + two
+    * counts ([[graft.expressions.VecSumAgg]]). Null embeddings are
     * excluded and counted apart; a window with none (or a zero-norm
     * sum) still EMITS with null stats.
     */
-  def embeddingDriftMonitor(embCol: String, length: String,
+  def embeddingDriftMonitor(embCol: String, window: WindowShape,
                             baselineVec: Seq[Double],
-                            slide: Option[String] = None,
-                            by: Seq[String] = Seq.empty): DataStream = {
-    import graft.operators.Drift
-    require(baselineVec.nonEmpty, "baseline centroid is empty")
-    val monitored = window(by.map(col), Drift.centroidAggs(embCol),
-      length, slide)
-    monitored.select(Seq(col("window_start_time"),
-      col("window_end_time")) ++ by.map(col) ++ Seq(col("n_rows")) ++
-      Drift.centroidStatCols(baselineVec): _*)
-  }
+                            by: Seq[String] = Seq.empty): DataStream =
+    monitor(window, by, Seq(centroidStat(
+      graft.operators.Drift.CentroidBaseline(embCol, baselineVec),
+      tag = "", outPrefix = "")))
 
-  /** [[embeddingDriftMonitor]] against a PERSISTED baseline centroid
-    * ([[graft.operators.DedupIndex.writeVec]] — dim pinned by its
-    * sidecar, mismatches refused).
+  /** ONE-PASS composite ingest-health monitor — the whole monitor
+    * family's answer from a SINGLE windowed aggregation over a
+    * single scan of the stream: per window (and per `by` key), the
+    * row count, KMV distinct estimate and dup rate of `distinctCol`
+    * ([[distinctMonitor]]'s columns), plus — for each baseline
+    * supplied — the cross-drop overlap (`n_overlap_est`/
+    * `overlap_frac`, [[overlapMonitor]]'s — riding the SAME window
+    * sketch the distinct section maintains, so this section costs
+    * zero extra state; the frozen sketch must be built with this
+    * monitor's k over the same column), the numeric value-distribution
+    * drift (`n_null`/`tvd`/`max_shift`/`psi`, [[driftMonitor]]'s),
+    * the categorical mix drift (`cat_tvd`/`cat_max_shift`/`cat_psi`,
+    * [[categoryDriftMonitor]]'s) and the embedding-centroid drift
+    * (`emb_n_null`/`emb_centroid_cos`/`emb_centroid_drift`,
+    * [[embeddingDriftMonitor]]'s). The composite's per-window state
+    * is the SUM of its sections' — still constant in ingest volume —
+    * while the standalone monitors cost one scan (and one state
+    * store) EACH of the same drop. Each section is built by the same
+    * statistic builder its standalone monitor uses.
     */
-  def embeddingDriftMonitorFromIndex(embCol: String, length: String,
-                                     baselinePath: String, dim: Int,
-                                     slide: Option[String] = None)
-      : DataStream =
-    embeddingDriftMonitor(embCol, length, graft.operators.DedupIndex
-      .readVec(df.sparkSession, baselinePath, dim).toSeq, slide)
-
-  /** [[categoryDriftMonitor]] against a PERSISTED category baseline
-    * ([[graft.operators.DedupIndex.writeCats]] — top_n pinned by its
-    * sidecar, mismatches refused).
-    */
-  def categoryDriftMonitorFromIndex(catCol: String, length: String,
-                                    baselinePath: String,
-                                    topN: Int = 20,
-                                    slide: Option[String] = None,
-                                    eps: Double = 1e-6): DataStream =
-    categoryDriftMonitor(catCol, length, graft.operators.DedupIndex
-      .readCats(df.sparkSession, baselinePath, topN), slide, eps)
-
-  /** Shared drift-monitor tail: window the B+2 counts
-    * ([[graft.operators.Drift.driftAggs]]), derive the three stats
-    * over observed vs literal baseline fractions.
-    */
-  private def driftFinish(bucket: Column, nonNullCount: Column,
-                          baselineFracs: Seq[Double], length: String,
-                          slide: Option[String], eps: Double,
-                          by: Seq[String] = Seq.empty): DataStream = {
-    import graft.operators.Drift
-    val monitored = window(by.map(col),
-      Drift.driftAggs(bucket, nonNullCount, baselineFracs.size),
-      length, slide)
-    monitored.select(Seq(col("window_start_time"),
-      col("window_end_time")) ++ by.map(col) ++ Seq(col("n_rows")) ++
-      Drift.statCols(baselineFracs, eps): _*)
-  }
-
-  private def distinctMonitorAggs(valueCol: String,
-                                  k: Int): Seq[Column] = {
-    import graft.operators.Sketches
-    Seq(count(lit(1)).as("n_rows"),
-      Sketches.kmvSketch(col(valueCol), k).as("__sk"))
-  }
-
-  private def finishDistinctMonitor(monitored: DataStream, k: Int,
-                                    by: Seq[String] = Seq.empty)
-      : DataStream = {
-    import graft.operators.Sketches
-    val est = Sketches.kmvDistinct(col("__sk"), k)
-    // clamp at 0: the saturated-regime estimator's ~1/√(k−2) error
-    // can read a few % above n_rows, and a negative duplication RATE
-    // is nonsense for the alarm this feeds
-    monitored.select(Seq(col("window_start_time"),
-      col("window_end_time")) ++ by.map(col) ++ Seq(
-      col("n_rows"), round(est, 6).as("n_distinct_est"),
-      greatest(lit(0.0),
-        round(lit(1.0) - est / col("n_rows"), 6)).as("dup_rate")): _*)
-  }
-
-  /** [[healthMonitor]] against PERSISTED baselines — each section
-    * loads from its [[graft.operators.DedupIndex]] artifact (built
-    * once per baseline drop; geometry pinned by the sidecars,
-    * mismatches refused like every index read) and rides as
-    * literals: `valueIndex = (valueCol, path, nBuckets)` →
-    * writeHist's boundaries+fractions, `categoryIndex = (catCol,
-    * path, topN)` → writeCats' category fractions, `embeddingIndex
-    * = (embCol, path, dim)` → writeVec's SUM centroid,
-    * `overlapIndex = path` → writeKmv's prior-drop sketch over the
-    * distinct column (k pinned by its sidecar = this monitor's k).
-    */
-  def healthMonitorFromIndexes(distinctCol: String, length: String,
-      valueIndex: Option[(String, String, Int)] = None,
-      categoryIndex: Option[(String, String, Int)] = None,
-      embeddingIndex: Option[(String, String, Int)] = None,
-      overlapIndex: Option[String] = None,
-      slide: Option[String] = None,
-      k: Int = 1024, eps: Double = 1e-6,
-      by: Seq[String] = Seq.empty): DataStream = {
-    import graft.operators.{DedupIndex, Drift}
-    val v = valueIndex.map { case (c, p, n) =>
-      val (bounds, fracs) = DedupIndex.readHist(df.sparkSession, p, n)
-      Drift.ValueBaseline(c, bounds, fracs)
-    }
-    val cat = categoryIndex.map { case (c, p, n) =>
-      Drift.CategoryBaseline(c,
-        DedupIndex.readCats(df.sparkSession, p, n))
-    }
-    val emb = embeddingIndex.map { case (c, p, d) =>
-      Drift.CentroidBaseline(c,
-        DedupIndex.readVec(df.sparkSession, p, d).toSeq)
-    }
-    val ov = overlapIndex.map { p =>
-      Drift.OverlapBaseline(
-        DedupIndex.readKmv(df.sparkSession, p, k)
-          .head().getSeq[Long](0))
-    }
-    healthMonitor(distinctCol, length, v, cat, emb, ov, slide, k,
-      eps, by)
-  }
+  def healthMonitor(distinctCol: String, window: WindowShape,
+                    value: Option[graft.operators.Drift.ValueBaseline] = None,
+                    category: Option[graft.operators.Drift.CategoryBaseline] = None,
+                    embedding: Option[graft.operators.Drift.CentroidBaseline] = None,
+                    overlap: Option[graft.operators.Drift.OverlapBaseline] = None,
+                    k: Int = 1024, eps: Double = 1e-6,
+                    by: Seq[String] = Seq.empty): DataStream =
+    monitor(window, by,
+      Seq(distinctStat(distinctCol, k), dupRateStat(k)) ++
+      overlap.map(overlapStat(_, k)) ++
+      value.map(valueStat(_, eps, tag = "v")) ++
+      category.map(categoryStat(_, eps, tag = "c",
+        outPrefix = "cat_", emitNull = false)) ++
+      embedding.map(centroidStat(_, tag = "e",
+        outPrefix = "emb_")))
 
   /** Alarm projection over this frame (any monitor/report output in
     * the family): adds `severity` + `alarms` columns per
@@ -992,43 +789,30 @@ final case class DataStream(
 
   /** Streaming data-quality validation — the per-window spelling of
     * [[graft.operators.Validate.report]]: the SAME declarative check
-    * suite, compiled into ONE windowed aggregation (per event-time
-    * window and per `by` key), emitting one row per (window, key,
-    * check) with `check_name`/`column_name`/`requirement`/`value`/
-    * `passed`. Every check is bounded-state by construction
-    * (conditional counts, min/max, exact sums, one ≤ k KMV sketch
-    * for [[graft.operators.Validate.Uniqueness]]) — constant per
-    * window regardless of ingest volume — and the per-check explode
-    * is a stateless projection after the aggregation, so batch and
-    * streaming emit identical rows (pinned by StreamingSpec's
-    * batch-twin test). The "did THIS hour's drop meet the contract"
-    * alarm, feeding a sink the same way the monitor family does.
+    * suite, compiled into ONE windowed aggregation (per window and per
+    * `by` key), emitting one row per (window, key, check) with
+    * `check_name`/`column_name`/`requirement`/`value`/`passed`. Every
+    * check is bounded-state by construction (conditional counts,
+    * min/max, exact sums, one ≤ k KMV sketch for
+    * [[graft.operators.Validate.Uniqueness]]), and the per-check
+    * explode is a stateless projection after the aggregation, so
+    * batch and streaming emit identical rows (pinned by
+    * StreamingSpec's batch-twin test). The "did THIS hour's drop (or
+    * burst) meet the contract" alarm, feeding a sink the same way the
+    * monitor family does.
     */
   def validationMonitor(checks: Seq[graft.operators.Validate.Check],
-                        length: String,
-                        slide: Option[String] = None,
-                        by: Seq[String] = Seq.empty): DataStream =
-    finishValidation(window(by.map(col),
-      graft.operators.Validate.suiteAggs(checks), length, slide),
-      checks, by)
-
-  /** [[validationMonitor]] over gap-merged SESSION windows — one
-    * verdict set per activity burst (the monitor family's session
-    * spelling): every check's aggregates merge as open sessions
-    * merge (counts add, min/max fold, KMV sketches union), so
-    * per-open-session state stays the suite's bounded sum. Same
-    * constant-key caveat as [[distinctMonitorSession]] when `by` is
-    * empty.
-    */
-  def validationMonitorSession(
-      checks: Seq[graft.operators.Validate.Check], gap: String,
-      by: Seq[String] = Seq.empty): DataStream = {
+                        window: WindowShape,
+                        by: Seq[String] = Seq.empty): DataStream = {
+    import graft.operators.Validate
     require(checks.nonEmpty, "validate: empty check suite")
-    val anchor = checks.collectFirst {
-      case c if c.columnName != "*" => c.columnName
-    }.getOrElse(eventTimeCol)
-    finishValidation(sessionWindow(monitorSessionKeys(anchor, by),
-      graft.operators.Validate.suiteAggs(checks), gap), checks, by)
+    val bounds = Seq(col("window_start_time"), col("window_end_time")) ++
+      by.map(col)
+    aggregate(window, by, Validate.suiteAggs(checks))
+      .select(bounds :+ Validate.reportEntries(checks): _*)
+      .select(bounds ++ Seq(col("__chk.check_name"),
+        col("__chk.column_name"), col("__chk.requirement"),
+        col("__chk.value"), col("__chk.passed")): _*)
   }
 
   /** [[graft.operators.Validate.severity]] over this frame — alert/
@@ -1039,60 +823,26 @@ final case class DataStream(
   def validationSeverity(): DataStream =
     next(graft.operators.Validate.severity(df))
 
-  private def finishValidation(monitored: DataStream,
-      checks: Seq[graft.operators.Validate.Check],
-      by: Seq[String]): DataStream = {
-    import graft.operators.Validate
-    val exploded = monitored.df.select(
-      Seq(col("window_start_time"), col("window_end_time")) ++
-        by.map(col) :+ Validate.reportEntries(checks): _*)
-    next(exploded.select(
-      Seq(col("window_start_time"), col("window_end_time")) ++
-        by.map(col) ++ Seq(col("__chk.check_name"),
-        col("__chk.column_name"), col("__chk.requirement"),
-        col("__chk.value"), col("__chk.passed")): _*))
-  }
-
-  /** Streaming trending-items monitor: per event-time window, the
-    * top-`k` most frequent values of `itemCol` by Misra–Gries
-    * bounded summary ([[graft.operators.Sketches]] — counts exact
-    * while a window holds < `capacity` distinct items, classic MG
-    * lower bounds beyond). One row per (window, rank): window bounds,
-    * rank, item, count_min, err (the window summary's undercount
-    * bound; true frequency ≤ count_min + err). State per window is
-    * ≤ `capacity` counters — constant in ingest volume — where an
-    * exact streaming `GROUP BY item` would key state by every
-    * distinct item ever seen. Ranking happens INSIDE expressions
-    * (sort the bounded map's entries, slice k) because window
-    * functions don't exist on streams; ties rank (count desc, item).
+  /** Streaming trending-items monitor: per window, the top-`k` most
+    * frequent values of `itemCol` by Misra–Gries bounded summary
+    * ([[graft.operators.Sketches]] — counts exact while a window
+    * holds < `capacity` distinct items, classic MG lower bounds
+    * beyond). One row per (window, rank): window bounds, rank, item,
+    * count_min, err (the window summary's undercount bound; true
+    * frequency ≤ count_min + err). State per window is ≤ `capacity`
+    * counters where an exact streaming `GROUP BY item` would key
+    * state by every distinct item ever seen; over sessions the
+    * summaries merge as sessions merge (the Agarwal-et-al merge
+    * [[graft.expressions.FreqSketchAgg]] implements). Ranking happens
+    * INSIDE expressions (sort the bounded map's entries, slice k)
+    * because window functions don't exist on streams; ties rank
+    * (count desc, item).
     */
-  def trendingMonitor(itemCol: String, length: String,
-                      slide: Option[String] = None,
+  def trendingMonitor(itemCol: String, window: WindowShape,
                       capacity: Int = 4096, k: Int = 10,
-                      by: Seq[String] = Seq.empty): DataStream =
-    finishTrendingMonitor(window(by.map(col),
-      Seq(graft.functions.freq_sketch(col(itemCol), capacity)
-        .as("__fs")), length, slide), k, by)
-
-  /** [[trendingMonitor]] over gap-merged SESSION windows — per
-    * activity burst, the top-`k` items by Misra–Gries bounded
-    * summary. State per open session stays ≤ `capacity` counters
-    * (MG summaries merge as sessions merge — the
-    * Agarwal-et-al merge [[graft.expressions.FreqSketchAgg]]
-    * implements is exactly Spark's session-state combine step).
-    */
-  def trendingMonitorSession(itemCol: String, gap: String,
-                             capacity: Int = 4096,
-                             k: Int = 10,
-                             by: Seq[String] = Seq.empty): DataStream =
-    finishTrendingMonitor(sessionWindow(
-      monitorSessionKeys(itemCol, by),
-      Seq(graft.functions.freq_sketch(col(itemCol), capacity)
-        .as("__fs")), gap), k, by)
-
-  private def finishTrendingMonitor(monitored: DataStream, k: Int,
-                                    by: Seq[String] = Seq.empty)
-      : DataStream = {
+                      by: Seq[String] = Seq.empty): DataStream = {
+    val bounds = Seq(col("window_start_time"), col("window_end_time")) ++
+      by.map(col)
     // bounded-map top-k: sort entries by (count desc, item asc) via
     // a (-count, item) struct sort, keep k, explode with rank
     val ranked = slice(array_sort(transform(
@@ -1102,28 +852,39 @@ final case class DataStream(
     // posexplode_OUTER: a window whose items were all null (schema
     // break upstream) must still EMIT — with a null item row — not
     // vanish from the monitor exactly when it should alarm
-    monitored.select(Seq(col("window_start_time"),
-        col("window_end_time")) ++ by.map(col) ++ Seq(
-        col("__fs.err").as("err"),
+    aggregate(window, by, Seq(graft.functions.freq_sketch(col(itemCol),
+        capacity).as("__fs")))
+      .select(bounds ++ Seq(col("__fs.err").as("err"),
         posexplode_outer(ranked).as(Seq("__r", "__e"))): _*)
-      .select(Seq(col("window_start_time"), col("window_end_time")) ++
-        by.map(col) ++ Seq(
-        (col("__r") + 1).cast("long").as("rank"),
+      .select(bounds ++ Seq((col("__r") + 1).cast("long").as("rank"),
         col("__e.item").as("item"),
         (-col("__e.negc")).as("count_min"), col("err")): _*)
   }
 
   /** Session window (gap-merged) aggregation — present-but-todo!() in
     * the reference (streaming_window.rs:1062); Spark-native here.
+    * Spark rejects a streaming session window with no grouping key
+    * ("Global aggregation with session window … is not supported"),
+    * so with empty `groupExprs` the sessions group on a CONSTANT key,
+    * dropped from the output. The key must be NON-FOLDABLE — a plain
+    * literal is stripped from the grouping by
+    * `RemoveLiteralFromGroupExpressions` and the plan degenerates back
+    * to the rejected global form — hence the always-zero hash of the
+    * event time. All session-merge state then rides one key (partials
+    * still combine map-side); real group keys shard it.
     */
   def sessionWindow(groupExprs: Seq[Column], aggExprs: Seq[Column],
                     gap: String): DataStream = {
     val base = if (df.isStreaming) df.withWatermark(eventTimeCol, watermarkDelay)
                else df
+    val keys =
+      if (groupExprs.nonEmpty) groupExprs
+      else Seq((xxhash64(col(eventTimeCol)) * lit(0)).as("__gk"))
     val agged = base
-      .groupBy(session_window(col(eventTimeCol), gap).as("__window") +: groupExprs: _*)
+      .groupBy(session_window(col(eventTimeCol), gap).as("__window") +: keys: _*)
       .agg(aggExprs.head, aggExprs.tail: _*)
-    next(flattenWindow(agged))
+    val flat = flattenWindow(agged)
+    next(if (groupExprs.nonEmpty) flat else flat.drop("__gk"))
   }
 
   /** Frame-exact fixed windows behind the fluent surface
@@ -1285,6 +1046,16 @@ final case class DataStream(
 }
 
 object DataStream {
+
+  /** One monitor statistic: its aggregates, riding the monitor's one
+    * windowed aggregation next to `n_rows`, and its output columns
+    * over them. Each statistic has one builder (`DataStream`'s private
+    * `distinctStat`, `valueStat`, …), used by its standalone monitor
+    * and by [[DataStream.healthMonitor]]; a `tag` keeps internal
+    * aggregate names apart where several statistics share that one
+    * aggregation.
+    */
+  private final case class Stat(aggs: Seq[Column], cols: Seq[Column])
 
   /** Fixed-length interval string → milliseconds (ExactWindow works
     * in epoch millis). Parsed with the Catalyst parser — NOT

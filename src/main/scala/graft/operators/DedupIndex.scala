@@ -618,7 +618,7 @@ object DedupIndex {
   }
 
   /** Build and persist a baseline HISTOGRAM for the drift monitors
-    * ([[graft.api.DataStream.driftMonitorFromIndex]]): quantile
+    * ([[graft.api.DataStream.driftMonitor]]): quantile
     * bucket boundaries ([[Drift.quantileBoundaries]] — one
     * mergeable-sketch pass) plus the EXACT per-bucket fractions
     * ([[Drift.histFractions]] — one conditional-count pass), a
@@ -704,7 +704,7 @@ object DedupIndex {
 
   /** Build and persist a baseline CATEGORY DISTRIBUTION for the
     * categorical drift monitor
-    * ([[graft.api.DataStream.categoryDriftMonitorFromIndex]]): the
+    * ([[graft.api.DataStream.categoryDriftMonitor]]): the
     * top-N categories by exact count plus the pooled
     * [[Drift.OtherCategory]] row (always present, possibly 0, so the
     * artifact stays mergeable). top_n pins the build; the CATEGORY

@@ -168,18 +168,28 @@ object Drift {
     * persisted [[DedupIndex]] forms).
     */
   final case class ValueBaseline(valueCol: String,
-      boundaries: Seq[Double], fracs: Seq[Double])
+      boundaries: Seq[Double], fracs: Seq[Double]) {
+    require(fracs.size == boundaries.size + 1,
+      s"B boundaries define B+1 buckets: got ${boundaries.size} " +
+        s"boundaries but ${fracs.size} baseline fractions")
+    require(fracs.forall(f => f >= 0.0 && f <= 1.0),
+      s"baseline fractions must be in [0, 1], got $fracs")
+  }
   final case class CategoryBaseline(catCol: String,
       fracs: Seq[(String, Double)])
   final case class CentroidBaseline(embCol: String,
-      sumVec: Seq[Double])
+      sumVec: Seq[Double]) {
+    require(sumVec.nonEmpty, "baseline centroid is empty")
+  }
   /** A frozen prior-drop KMV sketch over the SAME column (and same
     * k) as the health monitor's `distinctCol` — overlap rides the
     * window sketch the distinct section already maintains, so this
     * section costs ZERO extra state (load via
     * [[DedupIndex.readKmv]], which pins k).
     */
-  final case class OverlapBaseline(sketch: Seq[Long])
+  final case class OverlapBaseline(sketch: Seq[Long]) {
+    require(sketch.nonEmpty, "baseline overlap sketch is empty")
+  }
 
   /** Thresholds for [[alarms]] — defaults follow the classic
     * monitoring rules of thumb (PSI <0.1 stable / 0.1–0.25 moderate /
@@ -296,15 +306,14 @@ object Drift {
                   baselineFracs: Seq[Double],
                   eps: Double = 1e-6): DataFrame = {
     require(groupCols.nonEmpty, "driftReport needs >= 1 group column")
-    require(baselineFracs.size == boundaries.size + 1,
-      s"B boundaries define B+1 buckets: got ${boundaries.size} " +
-        s"boundaries but ${baselineFracs.size} baseline fractions")
-    val aggs = driftAggs(histBucket(col(valueCol), boundaries),
-      count(col(valueCol)), baselineFracs.size)
+    val v = ValueBaseline(valueCol, boundaries, baselineFracs)
+    val aggs = count(lit(1)).as("n_rows") +: driftAggs(
+      histBucket(col(valueCol), v.boundaries), count(col(valueCol)),
+      v.fracs.size, "")
     df.groupBy(groupCols.map(col): _*)
       .agg(aggs.head, aggs.drop(1): _*)
       .select(groupCols.map(col) ++ Seq(col("n_rows")) ++
-        statCols(baselineFracs, eps): _*)
+        statCols(v.fracs, eps, "", "", emitNull = true): _*)
   }
 
   /** The element-wise SUM vector of an embedding column — the frozen
@@ -339,32 +348,29 @@ object Drift {
                           baselineVec: Seq[Double]): DataFrame = {
     require(groupCols.nonEmpty,
       "centroidDriftReport needs >= 1 group column")
-    require(baselineVec.nonEmpty, "baseline centroid is empty")
-    val aggs = centroidAggs(embCol)
+    val base = CentroidBaseline(embCol, baselineVec)
+    val aggs = count(lit(1)).as("n_rows") +: centroidAggs(embCol, "")
     df.groupBy(groupCols.map(col): _*)
       .agg(aggs.head, aggs.drop(1): _*)
       .select(groupCols.map(col) ++ Seq(col("n_rows")) ++
-        centroidStatCols(baselineVec): _*)
+        centroidStatCols(base.sumVec, "", ""): _*)
   }
 
-  private[graft] def centroidAggs(embCol: String): Seq[Column] =
-    count(lit(1)).as("n_rows") +: centroidAggsTagged(embCol, "")
-
-  /** The embedding half of [[centroidAggs]] with a column-name TAG,
-    * so the composite health monitor can ride several aggregate
-    * families (sketch, value buckets, category buckets, vec sum) in
-    * ONE windowed aggregation without internal-name collisions.
+  /** The centroid aggregates — non-null count and vec_sum — under a
+    * column-name TAG, so the composite health monitor can ride
+    * several aggregate families (sketch, value buckets, category
+    * buckets, vec sum) in ONE windowed aggregation without
+    * internal-name collisions (standalone spellings pass "").
     */
-  private[graft] def centroidAggsTagged(embCol: String,
-                                        tag: String): Seq[Column] =
+  private[graft] def centroidAggs(embCol: String,
+                                  tag: String): Seq[Column] =
     Seq(count(col(embCol)).as(s"__nn$tag"),
       graft.functions.vec_sum(col(embCol)).as(s"__vs$tag"))
 
-  private[graft] def centroidStatCols(baselineVec: Seq[Double])
-      : Seq[Column] =
-    centroidStatColsTagged(baselineVec, "", "")
-
-  private[graft] def centroidStatColsTagged(baselineVec: Seq[Double],
+  /** n_null/centroid_cos/centroid_drift over [[centroidAggs]]' TAGGED
+    * columns, output names under `outPrefix`.
+    */
+  private[graft] def centroidStatCols(baselineVec: Seq[Double],
       tag: String, outPrefix: String): Seq[Column] = {
     val cos = graft.functions.cosine_similarity(col(s"__vs$tag"),
       typedLit(baselineVec))
@@ -455,38 +461,24 @@ object Drift {
     if (lo == hi) s(lo) else s(lo) + (s(hi) - s(lo)) * (idx - lo)
   }
 
-  /** The B+2 bounded-state aggregate columns every drift spelling
-    * shares: total rows, non-null rows, one conditional count per
-    * bucket.
+  /** The bounded-state aggregate columns every drift spelling shares
+    * (next to the caller's n_rows): non-null rows and one conditional
+    * count per bucket, under a column-name TAG (see [[centroidAggs]]).
     */
-  private[graft] def driftAggs(bucket: Column, nonNullCount: Column,
-                               n: Int): Seq[Column] =
-    count(lit(1)).as("n_rows") +:
-      driftAggsTagged(bucket, nonNullCount, n, "")
-
-  /** [[driftAggs]] minus the shared n_rows, with a column-name TAG
-    * (see [[centroidAggsTagged]]).
-    */
-  private[graft] def driftAggsTagged(bucket: Column,
+  private[graft] def driftAggs(bucket: Column,
       nonNullCount: Column, n: Int, tag: String): Seq[Column] =
     nonNullCount.as(s"__nn$tag") +: (0 until n).map(i =>
       count(when(bucket === lit(i), 1)).as(s"__b$tag$i"))
 
-  /** The shared output tail over [[driftAggs]]' columns: n_null plus
-    * the three stats, each null when the group/window had no
-    * non-null rows.
-    */
-  private[graft] def statCols(baselineFracs: Seq[Double],
-                              eps: Double): Seq[Column] =
-    statColsTagged(baselineFracs, eps, "", "", emitNull = true)
-
-  /** [[statCols]] over TAGGED aggregate names, output columns under
-    * `outPrefix` (the composite health monitor emits the category
-    * family as cat_tvd/cat_max_shift/cat_psi next to the numeric
+  /** The shared output tail over [[driftAggs]]' TAGGED columns:
+    * n_null plus the three stats, each null when the group/window had
+    * no non-null rows; output columns under `outPrefix` (the
+    * composite health monitor emits the category family as
+    * cat_tvd/cat_max_shift/cat_psi next to the numeric
     * tvd/max_shift/psi); `emitNull = false` skips the n_null column
     * for spellings whose buckets pool nulls (categorical).
     */
-  private[graft] def statColsTagged(baselineFracs: Seq[Double],
+  private[graft] def statCols(baselineFracs: Seq[Double],
       eps: Double, tag: String, outPrefix: String,
       emitNull: Boolean): Seq[Column] = {
     val nn = col(s"__nn$tag")

@@ -59,10 +59,19 @@ object Storage {
   def compact(spark: SparkSession, path: String,
               targetFileBytes: Long = 128L << 20,
               rebalance: Boolean = false): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.{FileStatus, Path}
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // listStatus walks, not fs.listFiles: its LocatedFileStatus reads
+    // each file's permission, which the local filesystem without
+    // libhadoop gets by running `ls -ld` — one process per file
+    def parquetFiles(dir: Path): Seq[FileStatus] =
+      fs.listStatus(dir).toSeq.flatMap { e =>
+        if (e.isDirectory) parquetFiles(e.getPath)
+        else if (e.getPath.getName.endsWith(".parquet")) Seq(e)
+        else Nil
+      }
     // A hive-partitioned root must go through compactPartitioned: a
     // flat rewrite here would silently FLATTEN the key=value columns
     // into the data files and destroy partition pruning.
@@ -72,15 +81,9 @@ object Storage {
       s"$path contains key=value partition directories — a flat " +
         "compact would destroy the partition layout; use " +
         "compactPartitioned()")
-    val it = fs.listFiles(hPath, true)
-    var inFiles = 0
-    var totalBytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) {
-        inFiles += 1; totalBytes += f.getLen
-      }
-    }
+    val inputs = parquetFiles(hPath)
+    val inFiles = inputs.size
+    val totalBytes = inputs.map(_.getLen).sum
     require(inFiles > 0, s"no parquet files under $path")
     val nOut = math.max(1L,
       (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
@@ -95,11 +98,7 @@ object Storage {
     // for more files than input partitions, the true output count is
     // the smaller one — callers sizing downstream work need the real
     // number, not the request
-    val outIt = fs.listFiles(tmp, false)
-    var outFiles = 0
-    while (outIt.hasNext) {
-      if (outIt.next().getPath.getName.endsWith(".parquet")) outFiles += 1
-    }
+    val outFiles = parquetFiles(tmp).size
     fs.delete(old, true)
     require(fs.rename(hPath, old), s"could not move $hPath aside")
     // The window between the two renames is the only moment the table

@@ -46,6 +46,27 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
       s"spark.graft confs read by the library: $confs")
   }
 
+  test("every monitor takes its window as a WindowShape: no session or " +
+      "from-index monitor twins") {
+    // a twin per window shape or per baseline source multiplies the
+    // public surface by the shapes; the shape is one value and a
+    // persisted baseline is what DedupIndex.readX returns
+    val twin = ".*Monitor(Session|FromIndex(es)?)$".r
+    val twins = classOf[graft.api.DataStream].getMethods.toSeq
+      .map(_.getName).filter(twin.matches).distinct
+    assert(twins.isEmpty, s"monitor twins: $twins")
+    val monitors = classOf[graft.api.DataStream].getMethods.toSeq
+      .filter(_.getName.endsWith("Monitor"))
+    assert(monitors.map(_.getName).toSet == Set("distinctMonitor",
+      "overlapMonitor", "driftMonitor", "categoryDriftMonitor",
+      "embeddingDriftMonitor", "healthMonitor", "validationMonitor",
+      "trendingMonitor"))
+    monitors.foreach { m =>
+      assert(m.getParameterTypes.contains(classOf[graft.api.WindowShape]),
+        s"${m.getName} takes no WindowShape")
+    }
+  }
+
   test("entry() returns rows (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

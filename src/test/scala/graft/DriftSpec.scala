@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.DataStream
+import graft.api.WindowShape.Fixed
 import graft.operators.{DedupIndex, Drift}
 
 /** Distribution-drift monitors: bucket semantics, exact fractions,
@@ -95,7 +96,7 @@ class DriftSpec extends AnyFunSuite with SparkSpec {
       (11000L, 5.0), (12000L, 5.0),                   // [10, 20 s)
       (21000L, null)))                                // [20, 30 s)
     val out = DataStream(df, "ts")
-      .driftMonitor("value", "10 seconds", Seq(10.0), Seq(0.5, 0.5))
+      .driftMonitor("value", Fixed("10 seconds"), Seq(10.0), Seq(0.5, 0.5))
       .df.orderBy("window_start_time")
       .select($"n_rows", $"n_null", $"tvd", $"max_shift", $"psi")
       .collect()
@@ -122,13 +123,13 @@ class DriftSpec extends AnyFunSuite with SparkSpec {
     // identical distribution → all three stats exactly 0
     val same = tsDf(Seq((1000L, 5.0), (2000L, 15.0)))
     val z = DataStream(same, "ts")
-      .driftMonitor("value", "10 seconds", Seq(10.0), Seq(0.5, 0.5))
+      .driftMonitor("value", Fixed("10 seconds"), Seq(10.0), Seq(0.5, 0.5))
       .df.select($"tvd", $"max_shift", $"psi").head()
     assert((z.getDouble(0), z.getDouble(1), z.getDouble(2)) ==
       ((0.0, 0.0, 0.0)))
     // geometry mismatch refused
     val e = intercept[IllegalArgumentException] {
-      DataStream(same, "ts").driftMonitor("value", "10 seconds",
+      DataStream(same, "ts").driftMonitor("value", Fixed("10 seconds"),
         Seq(10.0), Seq(0.5, 0.3, 0.2))
     }
     assert(e.getMessage.contains("B+1 buckets"))
@@ -141,7 +142,7 @@ class DriftSpec extends AnyFunSuite with SparkSpec {
       .toDF("ms", "lang")
       .withColumn("ts", timestamp_millis($"ms"))
     val out = DataStream(df, "ts")
-      .categoryDriftMonitor("lang", "10 seconds",
+      .categoryDriftMonitor("lang", Fixed("10 seconds"),
         Seq("en" -> 0.5, "de" -> 0.5))
       .df.select($"n_rows", $"n_null", $"tvd", $"max_shift").head()
     // observed (en, de, other) = (0.5, 0, 0.5) vs (0.5, 0.5, 0)
@@ -150,7 +151,7 @@ class DriftSpec extends AnyFunSuite with SparkSpec {
     assert((out.getLong(0), out.getLong(1)) == (4L, 0L))
     assert(out.getDouble(2) == 0.5 && out.getDouble(3) == 0.5)
     val e = intercept[IllegalArgumentException] {
-      DataStream(df, "ts").categoryDriftMonitor("lang", "10 seconds",
+      DataStream(df, "ts").categoryDriftMonitor("lang", Fixed("10 seconds"),
         Seq("en" -> 0.5, "en" -> 0.5))
     }
     assert(e.getMessage.contains("distinct"))
@@ -354,11 +355,12 @@ class DriftSpec extends AnyFunSuite with SparkSpec {
     val df = Seq((1000L, "en"), (2000L, "de")).toDF("ms", "lang")
       .withColumn("ts", timestamp_millis($"ms"))
     val viaIndex = DataStream(df, "ts")
-      .categoryDriftMonitorFromIndex("lang", "10 seconds", dir,
-        topN = 2).df.collect().toSeq
-    val viaLit = DataStream(df, "ts")
-      .categoryDriftMonitor("lang", "10 seconds",
+      .categoryDriftMonitor("lang", Fixed("10 seconds"),
         DedupIndex.readCats(spark, dir, topN = 2)).df.collect().toSeq
+    val viaLit = DataStream(df, "ts")
+      .categoryDriftMonitor("lang", Fixed("10 seconds"),
+        Seq("en" -> 0.5, "de" -> 0.25, Drift.OtherCategory -> 0.25))
+      .df.collect().toSeq
     assert(viaIndex == viaLit)
     val e = intercept[IllegalArgumentException] {
       DedupIndex.readCats(spark, dir, topN = 5)
@@ -417,11 +419,13 @@ class DriftSpec extends AnyFunSuite with SparkSpec {
     assert(fracs.toSeq ==
       Drift.histFractions(base, "v", bounds).toSeq)
     val df = tsDf(Seq((1000L, 3.0), (2000L, 42.0), (3000L, 97.0)))
+    val (idxBounds, idxFracs) = DedupIndex.readHist(spark, dir, nBuckets = 5)
     val viaIndex = DataStream(df, "ts")
-      .driftMonitorFromIndex("value", "10 seconds", dir, nBuckets = 5)
+      .driftMonitor("value", Fixed("10 seconds"), idxBounds, idxFracs)
       .df.collect().toSeq
     val viaLiterals = DataStream(df, "ts")
-      .driftMonitor("value", "10 seconds", bounds, fracs)
+      .driftMonitor("value", Fixed("10 seconds"), bounds,
+        Drift.histFractions(base, "v", bounds).toSeq)
       .df.collect().toSeq
     assert(viaIndex == viaLiterals)
     val e = intercept[IllegalArgumentException] {
@@ -491,7 +495,7 @@ class DriftSpec extends AnyFunSuite with SparkSpec {
     val input = MemoryStream[(Long, String)](spark)
     val q = DataStream(input.toDF
         .selectExpr("timestamp_millis(_1) AS ts", "_2 AS u"), "ts")
-      .distinctMonitor("u", "10 seconds")
+      .distinctMonitor("u", Fixed("10 seconds"))
       .alarms()
       .sinkMemory("alarm_out")
     try {
@@ -520,7 +524,7 @@ class DriftSpec extends AnyFunSuite with SparkSpec {
       (4000L, "u3", Some(25.0), "zz", Some(Seq(1.0, 1.0))))
       .toDF("ms", "user", "value", "cat", "vec")
       .withColumn("ts", timestamp_millis($"ms"))
-    val out = DataStream(df, "ts").healthMonitor("user", "10 seconds",
+    val out = DataStream(df, "ts").healthMonitor("user", Fixed("10 seconds"),
       value = Some(Drift.ValueBaseline("value", Seq(10.0),
         Seq(0.5, 0.5))),
       category = Some(Drift.CategoryBaseline("cat",
@@ -548,14 +552,14 @@ class DriftSpec extends AnyFunSuite with SparkSpec {
       r.getDouble(10) == 0.0)
     // mismatched numeric baseline refuses loudly
     val e = intercept[IllegalArgumentException] {
-      DataStream(df, "ts").healthMonitor("user", "10 seconds",
+      DataStream(df, "ts").healthMonitor("user", Fixed("10 seconds"),
         value = Some(Drift.ValueBaseline("value", Seq(10.0),
           Seq(0.3, 0.3, 0.4))))
     }
     assert(e.getMessage.contains("B+1"))
     // empty centroid refuses
     val e2 = intercept[IllegalArgumentException] {
-      DataStream(df, "ts").healthMonitor("user", "10 seconds",
+      DataStream(df, "ts").healthMonitor("user", Fixed("10 seconds"),
         embedding = Some(Drift.CentroidBaseline("vec", Seq.empty)))
     }
     assert(e2.getMessage.contains("empty"))
@@ -576,7 +580,7 @@ class DriftSpec extends AnyFunSuite with SparkSpec {
     // keyed: per (window, cat) — each key's stats are the unkeyed
     // arithmetic over its own slice
     val keyed = DataStream(df, "ts")
-      .healthMonitor("user", "10 seconds", value = Some(vb),
+      .healthMonitor("user", Fixed("10 seconds"), value = Some(vb),
         by = Seq("cat"))
       .df.orderBy("cat")
       .select("cat", "n_rows", "n_distinct_est", "dup_rate", "tvd")
@@ -609,14 +613,18 @@ class DriftSpec extends AnyFunSuite with SparkSpec {
       when($"user" === "u1", typedLit(Seq(1.0, 0.0)))
         .otherwise(typedLit(Seq(0.0, 1.0))))
     val viaIndexes = DataStream(withVec, "ts")
-      .healthMonitorFromIndexes("user", "10 seconds",
-        valueIndex = Some(("value", s"$base/hist", 2)),
-        categoryIndex = Some(("cat", s"$base/cats", 2)),
-        embeddingIndex = Some(("vec", s"$base/vec", 2)),
-        overlapIndex = Some(s"$base/kmv"), k = 64)
+      .healthMonitor("user", Fixed("10 seconds"),
+        value = Some(Drift.ValueBaseline("value", bounds, fracs)),
+        category = Some(Drift.CategoryBaseline("cat",
+          DedupIndex.readCats(spark, s"$base/cats", 2))),
+        embedding = Some(Drift.CentroidBaseline("vec",
+          DedupIndex.readVec(spark, s"$base/vec", 2).toSeq)),
+        overlap = Some(Drift.OverlapBaseline(
+          DedupIndex.readKmv(spark, s"$base/kmv", 64)
+            .head().getSeq[Long](0))), k = 64)
       .df.collect().toSeq
     val viaLiterals = DataStream(withVec, "ts")
-      .healthMonitor("user", "10 seconds",
+      .healthMonitor("user", Fixed("10 seconds"),
         value = Some(Drift.ValueBaseline("value", bounds, fracs)),
         category = Some(Drift.CategoryBaseline("cat", cats)),
         embedding = Some(Drift.CentroidBaseline("vec", vec)),
@@ -626,7 +634,7 @@ class DriftSpec extends AnyFunSuite with SparkSpec {
     // overlap section exactness: window users u1,u2,u3 vs baseline
     // {u1,u2} → 2 of 3 distinct overlap (k=64 ≥ distinct → exact)
     val ov = DataStream(withVec, "ts")
-      .healthMonitor("user", "10 seconds",
+      .healthMonitor("user", Fixed("10 seconds"),
         overlap = Some(Drift.OverlapBaseline(sketch)), k = 64)
       .df.select("n_distinct_est", "n_overlap_est", "overlap_frac")
       .as[(Double, Double, Double)].head()
@@ -635,7 +643,7 @@ class DriftSpec extends AnyFunSuite with SparkSpec {
         BigDecimal.RoundingMode.HALF_UP).toDouble)))
     // a sketch bigger than this monitor's k refuses
     val e = intercept[IllegalArgumentException] {
-      DataStream(withVec, "ts").healthMonitor("user", "10 seconds",
+      DataStream(withVec, "ts").healthMonitor("user", Fixed("10 seconds"),
         overlap = Some(Drift.OverlapBaseline(Seq.fill(65)(1L))),
         k = 64)
     }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.DataStream
+import graft.api.WindowShape.Fixed
 
 /** Checkpoint/recovery semantics — replaces the reference's
   * orchestrator + SlateDB offset/state snapshots (SURVEY §2.7) with
@@ -91,7 +92,7 @@ class RecoverySpec extends AnyFunSuite with SparkSpec {
         .parquet(inputDir.getAbsolutePath)
       DataStream(src.withColumn("ts",
           timestamp_millis($"occurred_at_ms")), "ts")
-        .healthMonitor("sensor_name", "10 seconds",
+        .healthMonitor("sensor_name", Fixed("10 seconds"),
           value = Some(Drift.ValueBaseline("reading", Seq(10.0),
             Seq(0.25, 0.75))))
         .toDF.writeStream.outputMode("append")
@@ -144,7 +145,7 @@ class RecoverySpec extends AnyFunSuite with SparkSpec {
         .validationMonitor(Seq(
           FracBetween("reading", 0.0, 10.0, 0.9),
           Uniqueness("sensor_name", 0.9, k = 64),
-          SizeAtLeast(4)), "10 seconds")
+          SizeAtLeast(4)), Fixed("10 seconds"))
         .toDF.writeStream.outputMode("append")
         .option("checkpointLocation", ckpt)
         .option("path", outDir)

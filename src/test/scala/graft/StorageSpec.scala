@@ -134,6 +134,28 @@ class StorageSpec extends AnyFunSuite with SparkSpec {
       "reported output count must be what was actually written")
   }
 
+  test("compact starts no process: its listings never read file " +
+      "permissions (no `ls -ld` per file without libhadoop)") {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("graft-compact-spawn")
+      .toString + "/t"
+    spark.range(200).repartition(8).write.parquet(dir)
+    val rec = new jdk.jfr.Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val (nIn, nOut) = Storage.compact(spark, dir)
+      rec.stop()
+      assert(nIn == 8 && nOut == 1)
+      val jfr = java.nio.file.Files.createTempFile("graft-compact", ".jfr")
+      rec.dump(jfr)
+      val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr)
+        .asScala.map(_.getString("command")).toList
+      assert(commands.isEmpty,
+        s"${commands.size} spawns in compact, e.g. ${commands.take(3)}")
+    } finally rec.close()
+  }
+
   test("compact refuses a hive-partitioned root (layout would be " +
       "destroyed) and points at compactPartitioned") {
     import spark.implicits._

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.DataStream
+import graft.api.WindowShape.{Fixed, Session}
 
 /** The reference's canonical measurement event
   * (/root/reference/examples/src/lib.rs:3-17, FIXTURES.md §1).
@@ -99,6 +100,29 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       assert(rows(0).getAs[java.sql.Timestamp]("window_start_time").getTime == 0)
       // session end = last event + gap
       assert(rows(0).getAs[java.sql.Timestamp]("window_end_time").getTime == 11000)
+    } finally q.stop()
+  }
+
+  test("global session window on a stream: no group key, closed " +
+      "sessions emit") {
+    val (input, ds) = measurementStream()
+    val sessioned = ds.sessionWindow(Seq.empty,
+      Seq(count(lit(1)).as("n")), "5 seconds")
+    assert(sessioned.df.columns.toSeq ==
+      Seq("n", "window_start_time", "window_end_time"))
+    val q = sessioned.sinkMemory("global_sess_out")
+    try {
+      // two sensors, one burst: the session spans both keys
+      input.addData(Measurement(0, "a", 1.0), Measurement(3000, "b", 1.0),
+        Measurement(6000, "a", 1.0))
+      q.processAllAvailable()
+      input.addData(Measurement(60000, "a", 1.0)) // watermark far ahead
+      q.processAllAvailable()
+      val rows = spark.table("global_sess_out")
+        .select("n", "window_start_time", "window_end_time")
+        .as[(Long, java.sql.Timestamp, java.sql.Timestamp)].collect()
+        .map { case (n, s, e) => (n, s.getTime, e.getTime) }.toList
+      assert(rows == List((3L, 0L, 11000L)))
     } finally q.stop()
   }
 
@@ -503,7 +527,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   test("distinctMonitor: per-window distinct count and dup rate, " +
       "exact in the unsaturated regime, bounded sketch state") {
     val (input, ds) = measurementStream()
-    val q = ds.distinctMonitor("sensor_name", "10 seconds")
+    val q = ds.distinctMonitor("sensor_name", Fixed("10 seconds"))
       .sinkMemory("monitor_out")
     try {
       // window [0,10s): 5 rows over 2 distinct sensors → dup_rate 0.6
@@ -531,7 +555,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   test("trendingMonitor: per-window top-k by bounded summary, exact " +
       "counts in the unsaturated regime, ties by item") {
     val (input, ds) = measurementStream()
-    val q = ds.trendingMonitor("sensor_name", "10 seconds", k = 2)
+    val q = ds.trendingMonitor("sensor_name", Fixed("10 seconds"), k = 2)
       .sinkMemory("trending_out")
     try {
       // window [0,10s): a×3, b×2, c×1 → top2 = (a,3), (b,2), err 0
@@ -559,7 +583,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   test("distinctMonitorSession: per gap-merged session rows/distinct/" +
       "dup rate, exact in the unsaturated regime") {
     val (input, ds) = measurementStream()
-    val q = ds.distinctMonitorSession("sensor_name", "5 seconds")
+    val q = ds.distinctMonitor("sensor_name", Session("5 seconds"))
       .sinkMemory("sess_monitor_out")
     try {
       // burst 1: events at 0/3/6/6 s (gaps < 5 s merge) → session
@@ -589,7 +613,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   test("trendingMonitorSession: per-session top-k; MG summaries merge " +
       "as micro-batch sub-sessions merge") {
     val (input, ds) = measurementStream()
-    val q = ds.trendingMonitorSession("sensor_name", "5 seconds",
+    val q = ds.trendingMonitor("sensor_name", Session("5 seconds"),
         k = 2).sinkMemory("sess_trending_out")
     try {
       // ONE burst delivered across TWO micro-batches whose halves
@@ -623,7 +647,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     graft.operators.DedupIndex.writeKmv(
       Seq("a", "b", "c").toDF("u"), "u", idx, k = 64)
     val (input, ds) = measurementStream()
-    val q = ds.overlapMonitor("sensor_name", "10 seconds", idx, k = 64)
+    val q = ds.overlapMonitor("sensor_name", Fixed("10 seconds"), idx, k = 64)
       .sinkMemory("overlap_out")
     try {
       // window [0,10 s): a,b,d,d → 3 distinct, 2 already in baseline
@@ -649,7 +673,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // sketched with must refuse (the estimator silently breaks on
     // mismatched k), like every other index read
     val e = intercept[IllegalArgumentException] {
-      ds.overlapMonitor("sensor_name", "10 seconds", idx, k = 128)
+      ds.overlapMonitor("sensor_name", Fixed("10 seconds"), idx, k = 128)
     }
     assert(e.getMessage.contains("rebuild"))
   }
@@ -658,7 +682,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       "literal baseline buckets; state is B+2 plain counts") {
     val (input, ds) = measurementStream()
     // baseline: half below 10, half at-or-above
-    val q = ds.driftMonitor("reading", "10 seconds", Seq(10.0),
+    val q = ds.driftMonitor("reading", Fixed("10 seconds"), Seq(10.0),
       Seq(0.5, 0.5)).sinkMemory("drift_out")
     try {
       // window [0,10 s): readings 5, 15, 15 → p = (1/3, 2/3)
@@ -781,7 +805,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val (input, ds) = measurementStream()
     val routed =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
-    val q = ds.driftMonitor("reading", "10 seconds", Seq(10.0),
+    val q = ds.driftMonitor("reading", Fixed("10 seconds"), Seq(10.0),
         Seq(0.5, 0.5))
       .alarms()
       .sinkAlerts("warn") { (batch, _) =>
@@ -856,7 +880,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val ds = DataStream(
       input.toDF.withColumn("ts", timestamp_millis($"occurred_at_ms")),
       "ts")
-    val q = ds.validationMonitor(suite, "10 seconds")
+    val q = ds.validationMonitor(suite, Fixed("10 seconds"))
       .sinkMemory("cusum_hist_out")
     try {
       input.addData(rows: _*)
@@ -898,7 +922,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       // flush row stays out — its window never closes in the stream)
       val histB = runId(DataStream(rows.toDF
           .withColumn("ts", timestamp_millis($"occurred_at_ms")), "ts")
-        .validationMonitor(suite, "10 seconds").df)
+        .validationMonitor(suite, Fixed("10 seconds")).df)
       val gradedB = Validate.severity(
         Validate.changePoints(histB, k = 0.5, h = 2.0))
       assert(graded.orderBy("run_id").collect().map(_.toSeq).toList ==
@@ -911,7 +935,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   test("categoryDriftMonitor: per-window mix vs frozen category " +
       "fractions, unseen categories pool to __other__") {
     val (input, ds) = measurementStream()
-    val q = ds.categoryDriftMonitor("sensor_name", "10 seconds",
+    val q = ds.categoryDriftMonitor("sensor_name", Fixed("10 seconds"),
       Seq("a" -> 0.5, "b" -> 0.5)).sinkMemory("catdrift_out")
     try {
       // window [0,10 s): a,a,b,xx → (a,b,other) = (.5,.25,.25) vs
@@ -936,7 +960,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       "matching its standalone monitor's arithmetic") {
     import graft.operators.Drift
     val (input, ds) = measurementStream()
-    val q = ds.healthMonitor("sensor_name", "10 seconds",
+    val q = ds.healthMonitor("sensor_name", Fixed("10 seconds"),
       value = Some(Drift.ValueBaseline("reading", Seq(10.0),
         Seq(0.5, 0.5))),
       category = Some(Drift.CategoryBaseline("sensor_name",
@@ -972,7 +996,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       "session forms across micro-batches") {
     import graft.operators.Drift
     val (input, ds) = measurementStream()
-    val q = ds.healthMonitorSession("sensor_name", "5 seconds",
+    val q = ds.healthMonitor("sensor_name", Session("5 seconds"),
       value = Some(Drift.ValueBaseline("reading", Seq(10.0),
         Seq(0.5, 0.5))),
       category = Some(Drift.CategoryBaseline("sensor_name",
@@ -1007,7 +1031,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       "tenant's silence does not close another's burst") {
     val (input, ds) = measurementStream()
     // tumbling + by: sensor_name is the tenant key, reading the value
-    val q = ds.distinctMonitor("reading", "10 seconds",
+    val q = ds.distinctMonitor("reading", Fixed("10 seconds"),
         by = Seq("sensor_name")).sinkMemory("keyed_monitor_out")
     try {
       input.addData(
@@ -1029,7 +1053,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // and b its own [1,6s) (with a shared constant key they would
     // have merged into one session)
     val (in2, ds2) = measurementStream()
-    val q2 = ds2.distinctMonitorSession("reading", "5 seconds",
+    val q2 = ds2.distinctMonitor("reading", Session("5 seconds"),
         by = Seq("sensor_name")).sinkMemory("keyed_sess_out")
     try {
       in2.addData(
@@ -1050,7 +1074,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   test("driftMonitorSession: per gap-merged burst, exact drift " +
       "stats; bucket counts merge as open sessions merge") {
     val (input, ds) = measurementStream()
-    val q = ds.driftMonitorSession("reading", "5 seconds", Seq(10.0),
+    val q = ds.driftMonitor("reading", Session("5 seconds"), Seq(10.0),
       Seq(0.5, 0.5)).sinkMemory("sess_drift_out")
     try {
       // ONE burst split across two micro-batches (session state must
@@ -1083,7 +1107,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val ds = DataStream(input.toDF.toDF("ms", "embedding")
       .withColumn("ts", timestamp_millis($"ms")), "ts")
     // baseline centroid points along (1, 0)
-    val q = ds.embeddingDriftMonitor("embedding", "10 seconds",
+    val q = ds.embeddingDriftMonitor("embedding", Fixed("10 seconds"),
       Seq(1.0, 0.0)).sinkMemory("embdrift_out")
     try {
       // window [0,10 s): sums to (3, 3) → cos 45° ≈ 0.707107; one
@@ -1115,7 +1139,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val input = MemoryStream[(Long, Option[String])](spark)
     val ds = DataStream(input.toDF.toDF("ms", "item")
       .withColumn("ts", timestamp_millis($"ms")), "ts")
-    val q = ds.trendingMonitor("item", "10 seconds", k = 2)
+    val q = ds.trendingMonitor("item", Fixed("10 seconds"), k = 2)
       .sinkMemory("trending_null_out")
     try {
       input.addData((1000L, None), (2000L, None), (3000L, None))
@@ -1143,7 +1167,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val ds = DataStream(
       input.toDF.withColumn("ts", timestamp_millis($"occurred_at_ms")),
       "ts")
-    val q = ds.validationMonitor(suite, "10 seconds")
+    val q = ds.validationMonitor(suite, Fixed("10 seconds"))
       .sinkMemory("validate_out")
     try {
       // window [0,10s): 4 rows, 1 null reading (completeness 0.75
@@ -1189,7 +1213,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         NullableMeasurement(13000, "f", Some(3.0))).toDF
         .withColumn("ts", timestamp_millis($"occurred_at_ms"))
       val twin = DataStream(batch, "ts")
-        .validationMonitor(suite, "10 seconds").df
+        .validationMonitor(suite, Fixed("10 seconds")).df
         .orderBy("window_start_time", "check_name")
         .select("check_name", "value", "passed")
         .as[(String, Double, Boolean)].collect().toList
@@ -1205,8 +1229,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val ds = DataStream(
       input.toDF.withColumn("ts", timestamp_millis($"occurred_at_ms")),
       "ts")
-    val q = ds.validationMonitorSession(Seq(
-        Completeness("reading", 0.9), SizeAtLeast(3)), "5 seconds")
+    val q = ds.validationMonitor(Seq(
+        Completeness("reading", 0.9), SizeAtLeast(3)), Session("5 seconds"))
       .validationSeverity()
       .sinkMemory("validate_sess_out")
     try {
@@ -1246,7 +1270,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       input.toDF.withColumn("ts", timestamp_millis($"occurred_at_ms")),
       "ts")
     val q = ds.validationMonitor(Seq(Completeness("reading", 0.9)),
-        "10 seconds", by = Seq("sensor_name"))
+        Fixed("10 seconds"), by = Seq("sensor_name"))
       .sinkMemory("validate_by_out")
     try {
       input.addData(

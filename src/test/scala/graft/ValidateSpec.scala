@@ -432,6 +432,7 @@ class ValidateSpec extends AnyFunSuite with SparkSpec {
       "day), accumulate per (run, metric, hour) across daily drops, " +
       "and a drifted window flags against its own hour's history") {
     import graft.api.DataStream
+    import graft.api.WindowShape.Fixed
     import graft.operators.Drift
     // one 'drop' per day: two hourly windows (00 and 01), values
     // drawn so hour 00 sits at the baseline mix and hour 01 slightly
@@ -454,7 +455,7 @@ class ValidateSpec extends AnyFunSuite with SparkSpec {
         .select(timestamp_millis($"ms").as("ts"), $"v")
     }
     def windows(df: org.apache.spark.sql.DataFrame) =
-      DataStream(df, "ts").driftMonitor("v", "1 hour", bounds, fracs)
+      DataStream(df, "ts").driftMonitor("v", Fixed("1 hour"), bounds, fracs)
         .df
         .withColumn("hour_of_day",
           hour(col("window_start_time")))
